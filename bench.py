@@ -30,7 +30,9 @@ def compact_metric_line(out: dict, cap: int = 1500) -> str:
     structurally impossible: if the full object would exceed ``cap``
     chars it degrades stepwise — first dropping the optional
     per-query normalized map, then falling back to the five
-    driver-required keys — so the line ALWAYS parses and always fits.
+    driver-required keys with ``queries`` cut to the slowest entries
+    that fit (plus a ``queries_truncated`` count of the dropped ones) —
+    so the line ALWAYS parses and always fits.
     tests/test_bench_contract.py pins both the no-degradation property
     for the current suite and the degradation ladder."""
     line = json.dumps(out)
@@ -40,8 +42,15 @@ def compact_metric_line(out: dict, cap: int = 1500) -> str:
     line = json.dumps(slim)
     if len(line) <= cap:
         return line
-    keep = {k: out[k] for k in ("metric", "value", "unit", "queries", "sf") if k in out}
-    return json.dumps(keep)
+    head = {k: out[k] for k in ("metric", "value", "unit", "sf") if k in out}
+    slowest = sorted(out.get("queries", {}).items(), key=lambda kv: -kv[1])
+    for n in range(len(slowest), -1, -1):
+        line = json.dumps(
+            {**head, "queries": dict(slowest[:n]), "queries_truncated": len(slowest) - n}
+        )
+        if len(line) <= cap:
+            break
+    return line
 
 
 def main() -> None:

@@ -3,8 +3,17 @@ SimHash, n-gram Jaccard.
 
 Scale design: every path is a hash-partition + band-bucket join — never
 an all-pairs cross join. The exact-Jaccard verification only runs on
-LSH candidate pairs, so cost is O(candidates), not O(n²). All hashing
-is xxhash64 (JVM built-in, deterministic across runs/executors).
+LSH candidate pairs, so cost is O(candidates), not O(n²). Every hash is
+a JVM built-in, deterministic across runs/executors: xxhash64 on the
+scale paths, md5 on the oracle-replayable twins (Spark F.md5 == DuckDB
+md5, so the DuckDB oracles replay them bit-for-bit).
+
+The banded-LSH near-dup family is built from one set of private stages:
+_shingle_base (id + distinct shingle set) → a banded signature
+(minhash_lsh_pairs' Arrow minima, or _md5_banded over _md5_minhash) →
+_band_candidates (the band-bucket join) → _jaccard_verify (the exact
+verify on candidates only). The SimHash pair operators are thin calls
+to _simhash_pairs.
 """
 
 from __future__ import annotations
@@ -26,16 +35,93 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return latest_per_key(df, [text_col], [F.col(id_col).asc()])
 
 
-def minhash_signature(tok: Column, num_hashes: int, shingle_n: int = 3) -> Column:
-    """MinHash signature over word-n-gram shingles: component i is
-    min(xxhash64(shingle, i)) — the classic permutation approximation.
-    Pure JVM expressions; one pass over the shingle array per row."""
-    sh = shingles(tok, shingle_n)
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(num_hashes)
-        ]
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    if num_hashes % bands:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands "
+            f"({bands}); a remainder would silently drop signature "
+            "components and change effective recall"
+        )
+    return num_hashes // bands
+
+
+def _shingle_base(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int = 3,
+    n_part: int | None = None,
+    carry: tuple[Column, ...] = (),
+    shingle_hash=None,
+) -> DataFrame:
+    """(id, text[, carry]) → (__id[, carry], __sh): each document's
+    distinct word-shingle set, documents with an empty set dropped.
+
+    Empty sets never reach the banding (optimization round 13, guide
+    §2.5): they would all share one sentinel signature — the one
+    unbounded hot bucket at scale — yet an empty doc can never appear
+    in the output (its exact Jaccard is NULL/0 < any threshold).
+
+    ``n_part`` is for the batch callers: it repartitions by id AHEAD of
+    the shingle map and persists the mapped frame. The map is CPU-bound
+    but byte-light, so both a single-row-group scan and AQE's size-based
+    coalescing would serialize it, while an explicit partition count
+    (which AQE respects) keeps every core busy. The frame then feeds
+    THREE consumers in one action (the banding and both sides of the
+    verify join); without a cache the tokenize→shingle→hash map
+    recomputes per consumer whenever AQE broadcasts a join side
+    (ReusedExchange only saves it in the all-shuffle plan). persist()
+    materializes it once — lineage kept (unlike localCheckpoint), and
+    Spark's CacheManager keys the entry by logical plan, so repeated
+    builds of the same query share one entry instead of accumulating.
+    Measured at sf0.1: 2.10s → 1.50s. The empty-set filter sits ABOVE
+    the cache: below it, the optimizer pushes it through the exchange
+    onto the scan, where it evaluates the whole shingle map a second
+    time, serially. None keeps the input's partitioning and caches
+    nothing (unpersisted callers, streaming frames).
+
+    ``shingle_hash`` maps each shingle before the in-row dedup (the
+    xxhash scale path hashes to the 31-bit domain). ``carry`` columns
+    ride along unchanged."""
+    base = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"), *carry)
+    if n_part is not None:
+        base = base.repartition(n_part, F.col("__id"))
+    sh = shingles(tokens(F.col("__t")), shingle_n)
+    if shingle_hash is not None:
+        sh = F.transform(sh, shingle_hash)
+    kept = [c for c in base.columns if c not in ("__id", "__t")]
+    base = base.select("__id", *kept, F.array_distinct(sh).alias("__sh"))
+    if n_part is not None:
+        base = base.transform(tracked_persist)
+    return base.filter(F.size("__sh") > 0)
+
+
+def _band_candidates(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
+    """(__id, __n, band, key) postings → (id_a, id_b, n_a, n_b): one row
+    per pair of documents sharing at least one (band, key) bucket.
+    Without ``right`` this is the band SELF-join and emits each
+    unordered pair once (id_a < id_b); with it, left × right (the
+    incremental delta × corpus join, disjoint frames, every pair kept).
+
+    Candidate generation stays a band-bucket JOIN deliberately (r13
+    finding, guide §2.5): the tempting groupBy(band, key) +
+    collect_list + in-row pair expansion computes the same pair set
+    with one shuffle, and at sf0.1 it measures the same — but a hot
+    bucket (a large near-duplicate group all sharing one band key)
+    then becomes ONE giant array expanded by ONE task, and AQE's skew
+    handling splits JOINS only, never aggregations. Measured on the
+    x100 replica lake (duplicate groups of ~100 by construction):
+    bucket-agg 527 s vs self-join 44 s — the join keeps the g²
+    expansion spread across skew-split partitions."""
+    l = left.alias("l")
+    r = (left if right is None else right).alias("r")
+    on = (F.col("l.band") == F.col("r.band")) & (F.col("l.key") == F.col("r.key"))
+    if right is None:
+        on = on & (F.col("l.__id") < F.col("r.__id"))
+    return (
+        l.join(r, on)
+        .groupBy(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
+        .agg(F.first("l.__n").alias("n_a"), F.first("r.__n").alias("n_b"))
     )
 
 
@@ -49,6 +135,35 @@ def _size_ratio_prune(candidates, threshold: float):
     while provably never changing the emitted pair set."""
     return candidates.filter(
         F.least("n_a", "n_b") >= threshold * F.greatest("n_a", "n_b")
+    )
+
+
+def _jaccard_verify(candidates: DataFrame, base: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, n_a, n_b) candidates + the _shingle_base frame →
+    (id_a, id_b, jaccard) with the exact shingle-set Jaccard >=
+    threshold. Only the candidate list joins back to the per-doc
+    shingle arrays (two id-keyed joins, only for docs that appear in a
+    candidate pair) and the intersection runs inside the row — the
+    arrays never ride the band explode."""
+    candidates = _size_ratio_prune(candidates, threshold)
+    sa = base.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa"))
+    sb = base.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb"))
+    inter = (
+        candidates.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("__sa", "__sb")).alias("n_inter"),
+            "n_a",
+            "n_b",
+        )
+    )
+    jac = F.col("n_inter").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    )
+    return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -83,13 +198,7 @@ def minhash_lsh_pairs(
     no quadratic blowup; at 100 TB this is the only viable shape.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}); a remainder would silently drop signature "
-            "components and change effective recall"
-        )
-    rows = num_hashes // bands
+    rows = _rows_per_band(num_hashes, bands)
     # Shuffle-frugal shape: the signature stage is entirely per-row
     # array math (no explode, no repartition, no aggregate) —
     # shingles are hashed to the 31-bit domain ONCE (pmod(xxhash64, p)),
@@ -154,44 +263,17 @@ def minhash_lsh_pairs(
             start = end
         return pd.Series(list(out))
 
-    # repartition BEFORE the heavy per-row math: the signature stage is
-    # CPU-bound but byte-light, so both a single-row-group scan and
-    # AQE's size-based coalescing would serialize it; an explicit
-    # partition count (which AQE respects) keeps every core busy
     if n_part is None:
         n_part = df.sparkSession.sparkContext.defaultParallelism
-    base = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")).repartition(
-        n_part, F.col("__id")
+    base = _shingle_base(
+        df,
+        id_col,
+        text_col,
+        shingle_n,
+        n_part=n_part,
+        shingle_hash=lambda s: F.pmod(F.xxhash64(s), F.lit(p)),
     )
-    base = base.select(
-        "__id",
-        F.array_distinct(
-            F.transform(
-                shingles(tokens(F.col("__t")), shingle_n),
-                lambda s: F.pmod(F.xxhash64(s), F.lit(p)),
-            )
-        ).alias("__sh"),
-    )
-    # The shingle frame feeds THREE consumers in one action (the
-    # signature/banding path and both sides of the candidate verify
-    # join); without a cache the expensive tokenize→shingle→hash map
-    # recomputes per consumer whenever AQE broadcasts a join side
-    # (ReusedExchange only saves it in the all-shuffle plan). persist()
-    # materializes it once — lineage kept (unlike localCheckpoint),
-    # and Spark's CacheManager keys the entry by logical plan, so
-    # repeated builds of the same query share one entry instead of
-    # accumulating. Measured at sf0.1: 2.10s → 1.50s.
-    base = base.transform(tracked_persist)
-    # Empty shingle sets leave the banding entirely (optimization round
-    # 13, guide §2.5): every empty doc carries the identical sentinel
-    # signature, so they ALL land in one (band, key) bucket — the one
-    # unbounded hot key in the operator at scale — yet an empty doc can
-    # never appear in the output (its exact Jaccard is NULL/0 < any
-    # threshold, and it can't share a bucket with a non-empty doc:
-    # non-empty minima are < p, the sentinel is exactly p). Dropping
-    # them before the signature pass is provably output-neutral and
-    # removes both the hot bucket and their share of the Arrow traffic.
-    sig = base.filter(F.size("__sh") > 0).select(
+    sig = base.select(
         "__id", F.size("__sh").alias("__n"), _minima(F.col("__sh")).alias("__m")
     )
     # Band key = the band's signature slice itself (optimization round
@@ -220,57 +302,7 @@ def minhash_lsh_pairs(
             )
         ).alias("band", "key"),
     ).transform(tracked_persist)
-
-    # Candidate generation stays a band SELF-JOIN deliberately (r13
-    # finding, guide §2.5): the tempting groupBy(band, key) +
-    # collect_list + in-row pair expansion computes the same pair set
-    # with one shuffle, and at sf0.1 it measures the same — but a hot
-    # bucket (a large near-duplicate group all sharing one band key)
-    # then becomes ONE giant array expanded by ONE task, and AQE's
-    # skew handling splits JOINS only, never aggregations. Measured on
-    # the x100 replica lake (duplicate groups of ~100 by construction):
-    # bucket-agg 527 s vs self-join 44 s — the join keeps the g²
-    # expansion spread across skew-split partitions.
-    left = banded.alias("l")
-    right = banded.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .groupBy(
-            F.col("l.__id").alias("id_a"),
-            F.col("r.__id").alias("id_b"),
-        )
-        .agg(F.first("l.__n").alias("n_a"), F.first("r.__n").alias("n_b"))
-    )
-    candidates = _size_ratio_prune(candidates, jaccard_threshold)
-    # Exact-Jaccard verification only on the candidate pairs: join the
-    # (small) candidate list back to the per-doc hashed-shingle arrays
-    # and intersect inside the row. The arrays never ride the 8-way
-    # band explode — only these two joins move them, keyed on doc id,
-    # and only for docs that actually appear in a candidate pair.
-    sa = base.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa"))
-    sb = base.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb"))
-    inter = (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__sa", "__sb")).alias("n_inter"),
-            "n_a",
-            "n_b",
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= jaccard_threshold
-    )
+    return _jaccard_verify(_band_candidates(banded), base, jaccard_threshold)
 
 
 def minhash_lsh_pairs_md5(
@@ -293,60 +325,17 @@ def minhash_lsh_pairs_md5(
     variant that PROVES the banded-LSH pipeline correct; the xxhash64
     variant is the faster JVM-hash scale path with identical structure.
 
-    Same shuffle shape as minhash_lsh_pairs: per-row signature math,
-    band bucket join, candidate-only verification joins.
+    Same stages as minhash_lsh_pairs: per-row signature math, band
+    bucket join, candidate-only verification joins.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, F.col("__id"))
-        .select(
-            "__id",
-            F.array_distinct(shingles(tokens(F.col("__t")), shingle_n)).alias("__sh"),
-        )
-        .filter(F.size("__sh") >= 1)
-    ).transform(tracked_persist)  # three consumers in one action — see minhash_lsh_pairs
-    # The banded posting frame is PERSISTED (r14, propagating the r13
-    # minhash_lsh_pairs fix): it feeds both sides of the band self-join,
-    # and without a cache each side re-evaluates the md5 signature stage
-    # (num_hashes interpreted array_min(transform(md5)) folds per row —
-    # the operator's dominant per-row cost) — the before-plan carried
-    # the full signature subtree TWICE. Caching the narrow
-    # (id, n, band, key) postings feeds both sides from one pass.
+    base = _shingle_base(
+        df, id_col, text_col, shingle_n, n_part=df.sparkSession.sparkContext.defaultParallelism
+    )
+    # both self-join sides read the banded postings: persisted (r14) so
+    # the md5 signature stage — num_hashes interpreted
+    # array_min(transform(md5)) folds per row — runs once, not twice
     banded = _md5_banded(base, num_hashes, bands).transform(tracked_persist)
-    left, right = banded.alias("l"), banded.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .groupBy(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .agg(F.first("l.__n").alias("n_a"), F.first("r.__n").alias("n_b"))
-    )
-    candidates = _size_ratio_prune(candidates, jaccard_threshold)
-    sa = base.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa"))
-    sb = base.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb"))
-    inter = (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__sa", "__sb")).alias("n_inter"),
-            "n_a",
-            "n_b",
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= jaccard_threshold
-    )
+    return _jaccard_verify(_band_candidates(banded), base, jaccard_threshold)
 
 
 def minhash_lsh_pairs_md5_incremental(
@@ -371,66 +360,27 @@ def minhash_lsh_pairs_md5_incremental(
     Same md5-permutation signatures as minhash_lsh_pairs_md5 (fully
     DuckDB-replayable). Returns (id_new, id_old, jaccard).
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.col(text_col).alias("__t"),
-            F.col(new_col).cast("boolean").alias("__new"),
-        )
-        .repartition(n_part, F.col("__id"))
-        .select(
-            "__id",
-            "__new",
-            F.array_distinct(shingles(tokens(F.col("__t")), shingle_n)).alias("__sh"),
-        )
-        .filter(F.size("__sh") >= 1)
-    ).transform(tracked_persist)  # three consumers in one action — see minhash_lsh_pairs
-    # persisted for the same reason as minhash_lsh_pairs_md5: the delta
-    # and corpus sides below are two readers of the banded frame, and
-    # without a cache each re-runs the md5 signature stage over the
-    # WHOLE input before its filter (r14)
+    base = _shingle_base(
+        df,
+        id_col,
+        text_col,
+        shingle_n,
+        n_part=df.sparkSession.sparkContext.defaultParallelism,
+        carry=(F.col(new_col).cast("boolean").alias("__new"),),
+    )
+    # the delta and corpus sides below are two readers of the banded
+    # frame — one md5 signature pass, not two
     banded = _md5_banded(base, num_hashes, bands).transform(tracked_persist)
-    delta = banded.filter(F.col("__new")).alias("d")
-    corpus = banded.filter(~F.col("__new")).alias("c")
-    candidates = (
-        delta.join(
-            corpus,
-            (F.col("d.band") == F.col("c.band"))
-            & (F.col("d.key") == F.col("c.key")),
-        )
-        .groupBy(F.col("d.__id").alias("id_new"), F.col("c.__id").alias("id_old"))
-        .agg(F.first("d.__n").alias("n_a"), F.first("c.__n").alias("n_b"))
-    )
-    candidates = _size_ratio_prune(candidates, jaccard_threshold)
-    sa = base.select(F.col("__id").alias("id_new"), F.col("__sh").alias("__sa"))
-    sb = base.select(F.col("__id").alias("id_old"), F.col("__sh").alias("__sb"))
-    inter = (
-        candidates.join(sa, "id_new")
-        .join(sb, "id_old")
-        .select(
-            "id_new",
-            "id_old",
-            F.size(F.array_intersect("__sa", "__sb")).alias("n_inter"),
-            "n_a",
-            "n_b",
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    return inter.select("id_new", "id_old", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= jaccard_threshold
+    candidates = _band_candidates(banded.filter(F.col("__new")), banded.filter(~F.col("__new")))
+    return _jaccard_verify(candidates, base, jaccard_threshold).select(
+        F.col("id_a").alias("id_new"), F.col("id_b").alias("id_old"), "jaccard"
     )
 
 
-def _md5_banded(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, distinct-shingle array[, extra cols]) → exploded md5 band
-    keys (id, extras..., __n, band, key) — the shared signature+banding
-    stage of the md5 MinHash variants."""
-    rows = num_hashes // bands
+def _md5_minhash(sh: Column, num_hashes: int) -> list[Column]:
+    """The md5-permutation MinHash signature of a shingle array, one
+    column per component: component i is the minimum of
+    md5(f"{i}|" + shingle) over the set."""
 
     def _salted_digest(i: int):
         # closure factory, NOT a default argument: a two-parameter
@@ -439,15 +389,21 @@ def _md5_banded(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
         prefix = F.lit(f"{i}|")
         return lambda s: F.md5(F.concat(prefix, s))
 
+    return [F.array_min(F.transform(sh, _salted_digest(i))) for i in range(num_hashes)]
+
+
+def _md5_banded(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, distinct-shingle array[, extra cols]) → exploded md5 band
+    keys (id, extras..., __n, band, key) — the shared signature+banding
+    stage of the md5 MinHash variants. Pure JVM expressions, so it runs
+    unchanged on a streaming frame."""
+    rows = _rows_per_band(num_hashes, bands)
     extras = [c for c in base.columns if c not in ("__id", "__sh")]
     sig = base.select(
         "__id",
         *extras,
         F.size("__sh").alias("__n"),
-        *[
-            F.array_min(F.transform(F.col("__sh"), _salted_digest(i))).alias(f"m{i}")
-            for i in range(num_hashes)
-        ],
+        *[m.alias(f"m{i}") for i, m in enumerate(_md5_minhash(F.col("__sh"), num_hashes))],
     )
     return sig.select(
         "__id",
@@ -603,12 +559,22 @@ def _simhash_sig_udf(n_bits: int):
     return _sig
 
 
-def simhash64(tok: Column) -> Column:
-    """L2: 64-bit SimHash over token xxhash64 values — per bit, sum
-    +1/-1 across tokens and keep the sign. Built-in expressions only:
-    the outer transform runs over the 64 bit positions, the inner
-    aggregate over the token hash array."""
-    hashes = F.transform(tok, lambda w: F.xxhash64(w))
+def _xxhash_token_hash(w: Column) -> Column:
+    # one-argument form for F.transform, which rejects variadic F.xxhash64
+    return F.xxhash64(w)
+
+
+def _md5_token_hash(w: Column) -> Column:
+    """First 8 hex chars of md5 as an integer — the engine-portable token
+    hash (DuckDB replays it as ('0x' || substr(md5(tok), 1, 8))::BIGINT)."""
+    return F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("bigint")
+
+
+def _simhash_fold(tok: Column, token_hash, n_bits: int) -> Column:
+    """SimHash as built-in expressions only: per bit, sum +1/-1 across
+    the token hashes and keep the sign. The outer loop runs over the
+    n_bits positions, the inner aggregate over the token hash array."""
+    hashes = F.transform(tok, token_hash)
 
     def _vote_fn(bit: int):
         # closure factory: pyspark inspects lambda arity, so the bit
@@ -618,7 +584,7 @@ def simhash64(tok: Column) -> Column:
         ).otherwise(-1)
 
     sig = F.lit(0).cast("bigint")
-    for b in range(64):  # unrolled: shift amounts must be literals
+    for b in range(n_bits):  # unrolled: shift amounts must be literals
         vote = F.aggregate(hashes, F.lit(0).cast("bigint"), _vote_fn(b))
         sig = sig.bitwiseOR(
             F.when(vote > 0, F.shiftleft(F.lit(1).cast("bigint"), b)).otherwise(
@@ -626,132 +592,48 @@ def simhash64(tok: Column) -> Column:
             )
         )
     return sig
+
+
+def simhash64(tok: Column) -> Column:
+    """L2: 64-bit SimHash over token xxhash64 values (the JVM-fold
+    reference spelling of simhash_neardup_pairs' signature)."""
+    return _simhash_fold(tok, _xxhash_token_hash, 64)
 
 
 def simhash32_md5(tok: Column) -> Column:
-    """Oracle-replayable 32-bit SimHash: per-token hash = first 8 hex
-    chars of md5 (the engine-portable hash — Spark F.md5 == DuckDB
-    md5), per bit sum +1/-1 votes across tokens, keep the sign. The
-    md5 twin of simhash64 (which uses xxhash64, JVM-only)."""
-    hashes = F.transform(
-        tok, lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("bigint")
-    )
-
-    def _vote_fn(bit: int):
-        # closure factory: pyspark inspects lambda arity, so the bit
-        # index can't ride along as a default argument
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    sig = F.lit(0).cast("bigint")
-    for b in range(32):  # unrolled: shift amounts must be literals
-        vote = F.aggregate(hashes, F.lit(0).cast("bigint"), _vote_fn(b))
-        sig = sig.bitwiseOR(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("bigint"), b)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return sig
+    """Oracle-replayable 32-bit SimHash over md5 token hashes — the md5
+    twin of simhash64 (which uses xxhash64, JVM-only) and the JVM-fold
+    reference spelling of simhash_md5_pairs' signature."""
+    return _simhash_fold(tok, _md5_token_hash, 32)
 
 
-def simhash_md5_pairs(
+def _simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int = 3,
-    block_bits: int = 8,
+    token_hash,
+    n_bits: int,
+    max_hamming: int,
+    block_bits: int,
 ) -> DataFrame:
-    """simhash_neardup_pairs' verifiability twin on the 32-bit md5
-    signature: block on each of the 32/block_bits chunks, verify true
-    Hamming with bit_count. Same pigeonhole recall guarantee
-    (max_hamming <= n_blocks-1 → recall 1); every step is replayable
-    in ANSI SQL, so this variant carries the hash-checked CORRECTNESS
-    row for the SimHash pipeline. Returns (id_a, id_b, hamming).
-
-    Signature = JVM md5 per token (ONE transform pass — still the
-    engine-portable hash the oracle replays) + the Arrow-vectorized
-    bit-vote UDF (r14, guide §4.2), replacing 32 interpreted
-    higher-order `aggregate` folds per row; bit-identical to
-    simhash32_md5 (tests/test_dedup.py asserts equality)."""
-    tok_hashes = F.transform(
-        tokens(F.col(text_col)),
-        lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("bigint"),
-    )
-    sigs = df.select(
-        F.col(id_col).alias("__id"),
-        _simhash_sig_udf(32)(tok_hashes).alias("__sig"),
-    # both self-join sides read this — one md5-simhash pass, not two
-    ).transform(tracked_persist)
-    n_blocks = 32 // block_bits
-    mask = (1 << block_bits) - 1
-    blocked = sigs.select(
-        "__id",
-        "__sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftright("__sig", i * block_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("__id", "__sig", F.col("bk.blk").alias("blk"), F.col("bk.key").alias("key"))
-    l, r = blocked.alias("l"), blocked.alias("r")
-    hamming = F.bit_count(F.col("l.__sig").bitwiseXOR(F.col("r.__sig")))
-    return (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(
-            F.col("l.__id").alias("id_a"),
-            F.col("r.__id").alias("id_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    block_bits: int = 16,
-) -> DataFrame:
-    """SimHash near-dup candidates: block on each of the 64/block_bits
+    """SimHash near-dup pairs: block on each of the n_bits/block_bits
     chunks, then verify the true Hamming distance with bit_count.
     Returns (id_a, id_b, hamming).
 
-    Recall guarantee (pigeonhole): with n_blocks chunks, a pair at
-    Hamming distance < n_blocks MUST share at least one exact chunk —
-    so max_hamming <= n_blocks-1 (the default, 3 of 4) gives recall 1.
-    A looser max_hamming still works but is probabilistic-recall AND
-    candidate-heavy: at sf0.1 the 138k hamming<=12 pairs are ~100× the
-    hamming<=3 set — exactly the blowup a 100 TB corpus can't afford.
-
-    Signature = JVM xxhash64 per token (one transform pass) + the
-    Arrow-vectorized bit-vote UDF (r14, guide §4.2), replacing the 64
-    interpreted higher-order `aggregate` folds per row of the simhash64
-    column spelling; bit-identical (tests/test_dedup.py asserts
-    equality against simhash64 on the corpus)."""
-    tok_hashes = F.transform(tokens(F.col(text_col)), lambda w: F.xxhash64(w))
+    Signature = ``token_hash`` per token as a JVM expression (ONE
+    transform pass; md5 keeps the twin oracle-replayable) + the
+    Arrow-vectorized bit-vote UDF (r14, guide §4.2), replacing n_bits
+    interpreted higher-order `aggregate` folds per row; bit-identical
+    to the _simhash_fold spelling (tests/test_dedup.py asserts
+    equality on the corpus)."""
+    tok_hashes = F.transform(tokens(F.col(text_col)), token_hash)
     sigs = df.select(
         F.col(id_col).alias("__id"),
-        _simhash_sig_udf(64)(tok_hashes).alias("__sig"),
+        _simhash_sig_udf(n_bits)(tok_hashes).alias("__sig"),
     # the signature frame feeds BOTH sides of the block self-join —
     # persist() computes the per-doc simhash once, not twice
     ).transform(tracked_persist)
-    n_blocks = 64 // block_bits
+    n_blocks = n_bits // block_bits
     mask = (1 << block_bits) - 1
     blocked = sigs.select(
         "__id",
@@ -787,6 +669,40 @@ def simhash_neardup_pairs(
         .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("hamming") <= max_hamming)
     )
+
+
+def simhash_md5_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    block_bits: int = 8,
+) -> DataFrame:
+    """simhash_neardup_pairs' verifiability twin on the 32-bit md5
+    signature. Same pigeonhole recall guarantee (max_hamming <=
+    n_blocks-1 → recall 1); every step is replayable in ANSI SQL, so
+    this variant carries the hash-checked CORRECTNESS row for the
+    SimHash pipeline. Returns (id_a, id_b, hamming)."""
+    return _simhash_pairs(df, id_col, text_col, _md5_token_hash, 32, max_hamming, block_bits)
+
+
+def simhash_neardup_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    block_bits: int = 16,
+) -> DataFrame:
+    """SimHash near-dup candidates over the 64-bit xxhash64 signature.
+    Returns (id_a, id_b, hamming).
+
+    Recall guarantee (pigeonhole): with n_blocks chunks, a pair at
+    Hamming distance < n_blocks MUST share at least one exact chunk —
+    so max_hamming <= n_blocks-1 (the default, 3 of 4) gives recall 1.
+    A looser max_hamming still works but is probabilistic-recall AND
+    candidate-heavy: at sf0.1 the 138k hamming<=12 pairs are ~100× the
+    hamming<=3 set — exactly the blowup a 100 TB corpus can't afford."""
+    return _simhash_pairs(df, id_col, text_col, _xxhash_token_hash, 64, max_hamming, block_bits)
 
 
 def minhash_lsh_clusters_md5(
@@ -834,22 +750,13 @@ def minhash_lsh_clusters_md5(
     one edge dedup, two id-keyed verify joins, then CC's bounded
     rounds — no stage is quadratic in group size.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
     from pyspark.sql import Window
 
     from .graph import connected_components
 
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    ids = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")).repartition(
-        n_part, F.col("__id")
+    base = _shingle_base(
+        df, id_col, text_col, shingle_n, n_part=df.sparkSession.sparkContext.defaultParallelism
     )
-    base = (
-        ids.select(
-            "__id",
-            F.array_distinct(shingles(tokens(F.col("__t")), shingle_n)).alias("__sh"),
-        ).filter(F.size("__sh") >= 1)
-    ).transform(tracked_persist)  # three consumers in one action — see minhash_lsh_pairs
     banded = _md5_banded(base, num_hashes, bands)
     # bucket representative: min (__id, __n) struct per (band, key) —
     # struct min orders by id first, so .__n rides along for free
@@ -868,28 +775,11 @@ def minhash_lsh_clusters_md5(
         .groupBy("id_a", "id_b")
         .agg(F.first("n_a").alias("n_a"), F.first("n_b").alias("n_b"))
     )
-    edges = _size_ratio_prune(edges, jaccard_threshold)
-    sa = base.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa"))
-    sb = base.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb"))
-    inter = (
-        edges.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__sa", "__sb")).alias("n_inter"),
-            "n_a",
-            "n_b",
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    verified = inter.filter(jac >= jaccard_threshold).select("id_a", "id_b")
+    verified = _jaccard_verify(edges, base, jaccard_threshold).select("id_a", "id_b")
     cc = connected_components(verified, "id_a", "id_b")
+    ids = df.select(F.col(id_col).alias("__id"))
     return (
-        ids.select("__id")
-        .join(cc, ids["__id"] == cc["id"], "left")
+        ids.join(cc, ids["__id"] == cc["id"], "left")
         .select(
             F.col("__id").alias("id"),
             F.coalesce("component", F.col("__id")).alias("cluster_id"),

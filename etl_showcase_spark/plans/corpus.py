@@ -601,35 +601,12 @@ WHERE 100 * n_inter >= {_CONTAIN_THR_PCT} * LEAST(n_a, n_b)
 
 @register("minhash_containment_neardup", oracle=_containment_oracle(), tags=("L2",))
 def minhash_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _md5_banded
+    from ..operators.dedup import _band_candidates, _md5_banded, _shingle_base
     from .llm_text import _MH_BANDS, _MH_HASHES
 
     d = table(spark, sf_dir, "documents")
-    n_part = spark.sparkContext.defaultParallelism
-    base = (
-        d.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t"))
-        .repartition(n_part, F.col("__id"))
-        .select(
-            "__id",
-            F.array_distinct(textops.shingles(textops.tokens(F.col("__t")), 3)).alias(
-                "__sh"
-            ),
-        )
-        .filter(F.size("__sh") >= 1)
-        .transform(tracked_persist)  # banding + both posting sides
-    )
-    banded = _md5_banded(base, _MH_HASHES, _MH_BANDS)
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .groupBy(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .agg(F.min("l.__n").alias("n_a"), F.min("r.__n").alias("n_b"))
-    )
+    base = _shingle_base(d, "doc_id", "text", 3, n_part=spark.sparkContext.defaultParallelism)
+    cand = _band_candidates(_md5_banded(base, _MH_HASHES, _MH_BANDS))
     post = base.select(F.col("__id"), F.explode("__sh").alias("g"))
     inter = (
         cand.join(post.select(F.col("__id").alias("id_a"), "g"), "id_a")

@@ -2431,36 +2431,19 @@ WHERE 100 * i.w_inter >= {_WJ_THR_PCT} * (x.wn + y.wn - i.w_inter)
     "weighted_jaccard_banded_neardup", oracle=_wjaccard_banded_oracle(), tags=("L2", "L4")
 )
 def weighted_jaccard_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _md5_banded
+    from ..operators.dedup import _band_candidates, _md5_banded, _shingle_base
 
-    d = table(spark, sf_dir, "documents")
-    n_part = spark.sparkContext.defaultParallelism
-    base = (
-        d.select(F.col("doc_id").alias("__id"), F.col("text").alias("__t"))
-        .repartition(n_part, F.col("__id"))
-        .select(
-            "__id",
-            F.array_distinct(textops.shingles(textops.tokens(F.col("__t")), 3)).alias(
-                "__sh"
-            ),
-        )
-        .filter(F.size("__sh") >= 1)
-        .transform(tracked_persist)  # banding + both verify posting sides
+    base = _shingle_base(
+        table(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        3,
+        n_part=spark.sparkContext.defaultParallelism,
     )
     # persisted (r14): both self-join sides read the banded postings —
-    # one md5 signature pass, not two (same fix as minhash_lsh_pairs_md5)
+    # one md5 signature pass, not two
     banded = _md5_banded(base, _MH_HASHES, _MH_BANDS).transform(tracked_persist)
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_candidates(banded).select("id_a", "id_b")
     post0 = base.select("__id", F.explode("__sh").alias("g"))
     nd = post0.agg(F.countDistinct("__id").cast("long").alias("n_docs"))
     dfw = (

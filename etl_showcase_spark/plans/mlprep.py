@@ -1074,41 +1074,16 @@ JOIN sh gx ON c.id_a = gx.doc_id JOIN sh gy ON c.id_b = gy.doc_id
     "minhash_estimate_calibration", oracle=_minhash_calibration_oracle(), tags=("L2", "G10")
 )
 def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _md5_banded
+    from ..operators.dedup import _band_candidates, _md5_banded, _md5_minhash, _shingle_base
     from .llm_text import _MH_BANDS, _MH_HASHES
 
-    d = table(spark, sf_dir, "documents")
-    toks = textops.tokens("text")
-    base = d.select(
-        F.col("doc_id").alias("__id"),
-        F.array_distinct(textops.shingles(toks, 3)).alias("__sh"),
-    ).filter(F.size("__sh") >= 1)
-
-    def salted(i: int):
-        prefix = F.lit(f"{i}|")
-        return lambda s: F.md5(F.concat(prefix, s))
-
+    base = _shingle_base(table(spark, sf_dir, "documents"), "doc_id", "text", 3)
     sig = base.select(
         "__id",
         "__sh",
-        *[
-            F.array_min(F.transform(F.col("__sh"), salted(i))).alias(f"m{i}")
-            for i in range(_MH_HASHES)
-        ],
+        *[m.alias(f"m{i}") for i, m in enumerate(_md5_minhash(F.col("__sh"), _MH_HASHES))],
     )
-    banded = _md5_banded(base, _MH_HASHES, _MH_BANDS)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .distinct()
-    )
+    cand = _band_candidates(_md5_banded(base, _MH_HASHES, _MH_BANDS)).select("id_a", "id_b")
     sx = sig.select(
         F.col("__id").alias("id_a"),
         F.col("__sh").alias("gx"),
@@ -1741,15 +1716,10 @@ GROUP BY b.doc_id
     "banded_dedup_first_writer", oracle=_banded_first_writer_oracle(), tags=("L1", "L2")
 )
 def banded_dedup_first_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _md5_banded
+    from ..operators.dedup import _md5_banded, _shingle_base
     from .llm_text import _MH_BANDS, _MH_HASHES
 
-    d = table(spark, sf_dir, "documents")
-    toks = textops.tokens("text")
-    base = d.select(
-        F.col("doc_id").alias("__id"),
-        F.array_distinct(textops.shingles(toks, 3)).alias("__sh"),
-    ).filter(F.size("__sh") >= 1)
+    base = _shingle_base(table(spark, sf_dir, "documents"), "doc_id", "text", 3)
     banded = _md5_banded(base, _MH_HASHES, _MH_BANDS)
     first = banded.groupBy("band", "key").agg(F.min("__id").alias("first_doc"))
     return (

@@ -1237,8 +1237,8 @@ def stream_banded_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``banded_dedup_first_writer`` query (plans/mlprep.py). Documents
     arrive doc_id-ordered; the MinHash signatures and band keys are the
     SAME JVM expressions as the batch query (operators/dedup.py
-    _md5_banded works unchanged on a streaming frame); per-BAND-KEY
-    GroupState holds the first writer's doc_id, and each arriving
+    _shingle_base and _md5_banded work unchanged on a streaming frame);
+    per-BAND-KEY GroupState holds the first writer's doc_id, and each arriving
     (doc, band) row is emitted once with its final verdict — under
     ordered arrival the first writer reaches every key before any
     duplicate, so a verdict never changes after emission (append mode
@@ -1251,16 +1251,10 @@ def stream_banded_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..operators import textops
-    from ..operators.dedup import _md5_banded
+    from ..operators.dedup import _md5_banded, _shingle_base
     from ..plans.llm_text import _MH_BANDS, _MH_HASHES
 
-    docs = documents_replay_stream(spark, sf_dir)
-    toks = textops.tokens("text")
-    base = docs.select(
-        F.col("doc_id").alias("__id"),
-        F.array_distinct(textops.shingles(toks, 3)).alias("__sh"),
-    ).filter(F.size("__sh") >= 1)
+    base = _shingle_base(documents_replay_stream(spark, sf_dir), "doc_id", "text", 3)
     banded = _md5_banded(base, _MH_HASHES, _MH_BANDS)
 
     def first_writer(key, pdfs, state):

@@ -58,19 +58,31 @@ def test_current_suite_line_fits_without_degradation():
 
 
 def test_oversized_suite_degrades_but_always_parses():
+    # step 0: a small suite renders in full
+    doc = _metric_doc(3)
+    line = bench.compact_metric_line(doc)
+    assert line == json.dumps(doc) and len(line) <= 1500
     # step 1: drop queries_normalized
     doc = _metric_doc(30)
     line = bench.compact_metric_line(doc)
     parsed = json.loads(line)
     assert len(line) <= 1500
     assert parsed["value"] == doc["value"] and parsed["queries"] == doc["queries"]
-    # step 2: hundreds of queries -> driver-required keys only
+    # step 2: hundreds of queries -> driver-required keys only, with
+    # queries cut to the slowest ones that fit
     doc = _metric_doc(400)
+    doc["queries"] = {n: round(0.001 * i, 3) for i, n in enumerate(doc["queries"])}
     line = bench.compact_metric_line(doc)
     parsed = json.loads(line)
+    assert len(line) <= 1500
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in parsed
-    assert parsed["queries"] == doc["queries"]
+    kept = parsed["queries"]
+    assert kept and len(kept) + parsed["queries_truncated"] == len(doc["queries"])
+    assert min(kept.values()) >= max(
+        t for n, t in doc["queries"].items() if n not in kept
+    )
+    assert all(doc["queries"][n] == t for n, t in kept.items())
 
 
 def test_metric_line_is_the_last_print_of_main():

@@ -4,6 +4,10 @@ values, and the LSH scale paths must agree with their exact baselines."""
 
 from __future__ import annotations
 
+import hashlib
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_showcase_spark.operators.dedup import (
@@ -84,6 +88,31 @@ def test_simhash_vectorized_sig_equals_jvm_fold(spark):
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     assert bad["n"] > 0 and bad["bad64"] == 0 and bad["bad32"] == 0
+
+
+FIXTURE_SF = str(Path(__file__).parent / "fixtures" / "sf0.001")
+
+
+@pytest.mark.parametrize(
+    "name, digest",
+    [
+        ("minhash_lsh_neardup", "d757d991bbf6d058353fce3e20b04a1e"),
+        ("simhash_neardup", "4fc98f0a24f697932ef441e87708b439"),
+    ],
+)
+def test_oracle_blind_neardup_output_pinned(spark, name, digest):
+    """The xxhash64 near-dup queries have no DuckDB oracle (JVM-only
+    hash), so only invariants guarded them. This pins their exact
+    output on the committed fixture: md5 of the canonicalized frame,
+    the same canonical hash the benchmark checks each pass. A refactor
+    of the banded-LSH/SimHash stages must leave both digests unchanged;
+    a deliberate output change re-pins them."""
+    from etl_showcase_spark.registry import all_specs
+    from etl_showcase_spark.testing import canonicalize
+
+    frame = all_specs()[name].build(spark, FIXTURE_SF).toPandas()
+    got = hashlib.md5(canonicalize(frame).to_csv(index=False).encode()).hexdigest()
+    assert len(frame) > 0 and got == digest
 
 
 def test_lsh_ann_recall_vs_brute_force(spark):

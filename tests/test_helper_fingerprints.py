@@ -67,6 +67,18 @@ HELPERS = [
     "etl_showcase_spark.functions.numeric:sql_davg",
     "etl_showcase_spark.functions.numeric:d2d",
     "etl_showcase_spark.functions.numeric:sql_d2d",
+    # the banded-LSH near-dup skeleton and the SimHash pair operator:
+    # minhash_lsh_neardup, neardup_cluster_canonical,
+    # minhash_containment_neardup, minhash_estimate_calibration and
+    # banded_dedup_first_writer (and the md5/SimHash twins) compose them
+    "etl_showcase_spark.operators.dedup:_shingle_base",
+    "etl_showcase_spark.operators.dedup:_band_candidates",
+    "etl_showcase_spark.operators.dedup:_size_ratio_prune",
+    "etl_showcase_spark.operators.dedup:_jaccard_verify",
+    "etl_showcase_spark.operators.dedup:_md5_minhash",
+    "etl_showcase_spark.operators.dedup:_md5_banded",
+    "etl_showcase_spark.operators.dedup:_simhash_sig_udf",
+    "etl_showcase_spark.operators.dedup:_simhash_pairs",
 ]
 
 
