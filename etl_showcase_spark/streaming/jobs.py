@@ -7,6 +7,12 @@ foreachBatch merge. Each job runs with Trigger.availableNow (the T1
 micro-batch trigger) so batch replays are deterministic and the results
 can be asserted against the batch twins in plans/events.py.
 
+The multi-batch twins all read ONE replay source, _parquet_replay: a
+parquet table (or a derived table staged to parquet first) replayed in
+sort-key order as deterministic row-offset micro-batches, drained by
+restarting the query over one checkpoint (_drain_runs) — so a twin
+differs from another only in its plan, never in its feed machinery.
+
 At scale these are the same plans Spark runs continuously: watermark
 state eviction bounds memory; the foreachBatch merge pairs with dynamic
 partition overwrite for idempotent re-delivery.
@@ -14,6 +20,9 @@ partition overwrite for idempotent re-delivery.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,27 +66,38 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_replay_stream(
-    spark: SparkSession, sf_dir: str, batch_rows: int = 2000
+def _parquet_replay(
+    spark: SparkSession, path: str, schema_ddl: str, order_by: list[str], batch_rows: int
 ) -> DataFrame:
-    """A Kafka-stand-in streaming source via the Spark 4 Python Data
-    Source streaming API: replays the events table in deterministic
-    (ts, event_id)-ordered micro-batches of ``batch_rows`` rows, with
-    row-position offsets — so every streaming job gets reproducible
-    multi-batch execution without a broker. The simple-reader API reads
-    driver-side (right for a replay/test source; a partitioned
-    DataSourceStreamReader is the high-throughput variant).
+    """The one replay source every streaming twin reads: a parquet
+    file (or dir) replayed as deterministic micro-batches of
+    ``batch_rows`` rows, in ``order_by`` (ascending) order, with
+    row-position offsets — so every twin gets reproducible multi-batch
+    execution without a broker. Via the Spark 4 Python Data Source
+    streaming API; the simple-reader API reads driver-side (right for a
+    replay/test source; a partitioned DataSourceStreamReader is the
+    high-throughput variant).
 
-    Classes are function-local so cloudpickle ships them by value
-    (same worker-import constraint as http_pyds_source)."""
+    The emitted columns are the field names of ``schema_ddl``, read
+    from the parquet as-is: list<float> embeddings arrive as Python
+    floats (float32→double widening is value-exact, so quantize() gives
+    the SAME integers as the batch scan) and doubles as the SAME doubles
+    the batch scan reads. A feed over a derived table stages it to
+    parquet first and replays that.
+
+    Classes are function-local so cloudpickle ships them by value (same
+    worker-import constraint as http_pyds_source). Re-registering
+    "parquet_replay" is harmless: ALL per-call variation (path, schema,
+    sort keys, batch_rows) rides reader options, and the classes carry
+    no closure state, so every registration binds identical behavior."""
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-    path = f"{sf_dir}/events.parquet"
-
-    class _ReplayReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
+    class _Reader(SimpleDataSourceStreamReader):
+        def __init__(self, opts, schema):
             self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "2000"))
+            self._cols = schema.fieldNames()
+            self._order = opts["order_by"].split(",")
+            self._batch = int(opts["batch_rows"])
             self._tbl = None
 
         def _table(self):
@@ -85,29 +105,17 @@ def events_replay_stream(
                 import pyarrow.compute as pc
                 import pyarrow.parquet as pq
 
-                t = pq.read_table(
-                    self._path,
-                    columns=["event_id", "ts", "user_id", "event_type", "value"],
-                )
-                self._tbl = t.take(
-                    pc.sort_indices(
-                        t,
-                        sort_keys=[("ts", "ascending"), ("event_id", "ascending")],
-                    )
-                )
+                t = pq.read_table(self._path, columns=self._cols)
+                keys = [(k, "ascending") for k in self._order]
+                self._tbl = t.take(pc.sort_indices(t, sort_keys=keys))
             return self._tbl
 
         def _rows(self, start: int, end: int):
             # a materialized list iterator, not a generator: Spark
             # pickles the batch into its prefetch cache and generators
             # don't pickle
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter(
-                [
-                    (r["event_id"], r["ts"], r["user_id"], r["event_type"], r["value"])
-                    for r in sl
-                ]
-            )
+            sl = self._table().slice(start, max(0, end - start))
+            return iter(list(zip(*(sl.column(c).to_pylist() for c in self._cols))))
 
         def initialOffset(self):
             return {"row": 0}
@@ -120,32 +128,62 @@ def events_replay_stream(
         def readBetweenOffsets(self, start, end):
             return self._rows(start["row"], end["row"])
 
-    class _ReplaySource(DataSource):
+    class _Source(DataSource):
         @classmethod
         def name(cls) -> str:
-            return "events_replay"
+            return "parquet_replay"
 
         def schema(self) -> str:
-            return (
-                "event_id long, ts timestamp, user_id long, "
-                "event_type string, value double"
-            )
+            return self.options["schema_ddl"]
 
         def simpleStreamReader(self, schema):
-            return _ReplayReader(self.options)
+            return _Reader(self.options, schema)
 
-    # re-registering "events_replay" is harmless — ALL per-call
-    # variation (path, batch_rows) rides reader options, and the class
-    # carries no closure state, so every registration binds identical
-    # behavior (unlike http_pyds_source, whose fetch closure forces a
-    # unique name per fetcher)
-    spark.dataSource.register(_ReplaySource)
+    spark.dataSource.register(_Source)
     return (
-        spark.readStream.format("events_replay")
+        spark.readStream.format("parquet_replay")
         .option("path", path)
+        .option("schema_ddl", schema_ddl)
+        .option("order_by", ",".join(order_by))
         .option("batch_rows", str(batch_rows))
         .load()
     )
+
+
+def _stage_dir(prefix: str) -> str:
+    """A fresh tmp dir for a feed's staged parquet, removed at exit
+    (the replay reads it until its drain finishes)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def events_replay_stream(
+    spark: SparkSession, sf_dir: str, batch_rows: int = 2000
+) -> DataFrame:
+    """A Kafka-stand-in streaming source: the events table replayed in
+    (ts, event_id)-ordered micro-batches of ``batch_rows`` rows."""
+    return _parquet_replay(
+        spark,
+        f"{sf_dir}/events.parquet",
+        "event_id long, ts timestamp, user_id long, event_type string, value double",
+        ["ts", "event_id"],
+        batch_rows,
+    )
+
+
+def _documents_replay(
+    spark: SparkSession, sf_dir: str, schema_ddl: str = "doc_id long, text string"
+) -> DataFrame:
+    """The documents table replayed in doc_id order, 100 rows a batch."""
+    return _parquet_replay(spark, f"{sf_dir}/documents.parquet", schema_ddl, ["doc_id"], 100)
+
+
+def _embeddings_replay(
+    spark: SparkSession, sf_dir: str, schema_ddl: str = "vec_id long, embedding array<double>"
+) -> DataFrame:
+    """The embeddings table replayed in vec_id order, 200 rows a batch."""
+    return _parquet_replay(spark, f"{sf_dir}/embeddings.parquet", schema_ddl, ["vec_id"], 200)
 
 
 def stream_tumbling_from_replay(
@@ -182,38 +220,43 @@ def stream_tumbling_from_replay(
     return _drain_replay(agg, "stream_replay_tumbling")
 
 
-def _drain_replay(result: DataFrame, name: str, mode: str = "complete") -> DataFrame:
-    """Run a replay-sourced streaming frame to exhaustion: repeated
-    availableNow starts over one shared checkpoint (each processes one
-    replay chunk; stateful operators restore from the checkpoint), until
-    a run consumes zero rows. Returns the memory table of the last run
-    that processed input — in complete mode, the final cross-batch
-    state."""
-    import tempfile
-
-    spark = result.sparkSession
+def _drain_runs(result: DataFrame, name: str, mode: str, sink) -> str:
+    """The restart loop both drains share: start ``result`` into
+    ``sink(writer)`` with availableNow over ONE shared checkpoint
+    (each start processes one replay chunk; stateful operators restore
+    from the checkpoint), until a run consumes zero rows. Returns the
+    query name of the last run that processed input (of the empty run
+    if none did). The checkpoint dir is deleted once the drain
+    finishes — no returned frame reads it."""
     ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
-    last_with_input = None
-    for _ in range(10_000):
-        qname = f"{name}_{uuid.uuid4().hex[:8]}"
-        q = (
-            result.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if any(p["numInputRows"] for p in q.recentProgress):
+    try:
+        last_with_input = None
+        for _ in range(10_000):
+            qname = f"{name}_{uuid.uuid4().hex[:8]}"
+            q = (
+                sink(result.writeStream)
+                .queryName(qname)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            if not any(p["numInputRows"] for p in q.recentProgress):
+                return last_with_input or qname
             last_with_input = qname
-        else:
-            break
-    else:
         raise RuntimeError(f"{name}: replay source not drained in 10000 runs")
-    if last_with_input is None:  # empty source: an empty frame with the schema
-        return spark.table(qname)
-    return spark.table(last_with_input)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _drain_replay(result: DataFrame, name: str, mode: str = "complete") -> DataFrame:
+    """Run a replay-sourced streaming frame to exhaustion (_drain_runs)
+    and return the memory table of the last run that processed input —
+    in complete mode, the final cross-batch state (an empty source gives
+    an empty frame with the schema)."""
+    qname = _drain_runs(result, name, mode, lambda w: w.format("memory"))
+    return result.sparkSession.table(qname)
 
 
 def _drain_replay_union(result: DataFrame, name: str, mode: str = "update") -> DataFrame:
@@ -227,29 +270,14 @@ def _drain_replay_union(result: DataFrame, name: str, mode: str = "update") -> D
     offset commit could duplicate a batch's rows, but emissions are
     full per-key state, so any latest-per-key / identical-duplicate
     consumer is unaffected)."""
-    import tempfile
-
     spark = result.sparkSession
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
     outdir = tempfile.mkdtemp(prefix=f"{name}_log_") + "/log"
     schema = result.schema
 
     def _append(bdf: DataFrame, _bid: int) -> None:
         bdf.write.mode("append").parquet(outdir)
 
-    for _ in range(10_000):
-        q = (
-            result.writeStream.foreachBatch(_append)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if not any(p["numInputRows"] for p in q.recentProgress):
-            break
-    else:
-        raise RuntimeError(f"{name}: replay source not drained in 10000 runs")
+    _drain_runs(result, name, mode, lambda w: w.foreachBatch(_append))
     try:
         return spark.read.schema(schema).parquet(outdir)
     except Exception:  # no emissions at all: empty frame, same schema
@@ -463,78 +491,6 @@ def stream_user_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted = _run_available_now(out, "stream_ewma", mode="update")
     # update-mode emission log -> current value = emission with the
     # largest (strictly monotone) n_events per user
-    from ..operators.relational import latest_per_key
-
-    return latest_per_key(emitted, ["user_id"], [F.col("n_events").desc()])
-
-
-def stream_user_event_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running event counts via Spark 4's transformWithState
-    API (StatefulProcessor + typed ValueState) — the successor surface
-    to applyInPandasWithState, with per-state-variable TTL and timers.
-
-    NOT RUNNABLE IN THIS CONTAINER (and therefore not a claimed
-    capability — see README): the Python worker side of
-    transformWithState needs google.protobuf, which this environment
-    lacks and cannot install. Raises ImportError with remediation
-    instead of failing deep inside a stage. The calling convention
-    (RocksDB provider + StatefulProcessor handle) is exercised wherever
-    protobuf is installed; stream_user_profile_state remains the
-    supported custom-stateful path."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithState requires google.protobuf on the Python "
-            "workers (pip install protobuf); use stream_user_profile_state "
-            "for the applyInPandasWithState equivalent"
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor
-
-    # transformWithState requires the RocksDB provider, but the session
-    # (possibly the driver's) is not ours to reconfigure permanently:
-    # restore the prior provider before returning the (materialized)
-    # result so later streaming queries keep their configured store
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    try:
-
-        class _CountProcessor(StatefulProcessor):
-            def init(self, handle):
-                self._count = handle.getValueState("count", "n long")
-
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as pd
-
-                n = self._count.get()[0] if self._count.exists() else 0
-                for pdf in rows:
-                    n += len(pdf)
-                self._count.update((n,))
-                yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-            def close(self):
-                pass
-
-        ev = read_events_stream(spark, sf_dir)
-        out = ev.groupBy("user_id").transformWithStateInPandas(
-            _CountProcessor(),
-            outputStructType="user_id long, n_events long",
-            outputMode="Update",
-            timeMode="None",
-        )
-        # _run_available_now blocks until the memory sink holds every
-        # emission, so the state store is done by the time we restore
-        emitted = _run_available_now(out, "stream_tws_counts", mode="update")
-    finally:
-        if prior is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior)
     from ..operators.relational import latest_per_key
 
     return latest_per_key(emitted, ["user_id"], [F.col("n_events").desc()])
@@ -867,70 +823,6 @@ def stream_click_purchase_full_outer(spark: SparkSession, sf_dir: str) -> DataFr
     return _run_available_now(joined, "stream_ssjoin_full", mode="append")
 
 
-def documents_replay_stream(
-    spark: SparkSession, sf_dir: str, batch_rows: int = 100
-) -> DataFrame:
-    """doc_id-ordered micro-batch replay of the documents table via the
-    Spark 4 Python Data Source streaming API — the documents-side
-    sibling of events_replay_stream (same row-position offsets, same
-    pickling constraints: function-local classes, materialized-list
-    iterators)."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    path = f"{sf_dir}/documents.parquet"
-
-    class _DocReplayReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "100"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path, columns=["doc_id", "text"])
-                self._tbl = t.take(
-                    pc.sort_indices(t, sort_keys=[("doc_id", "ascending")])
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter([(r["doc_id"], r["text"]) for r in sl])
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _DocReplaySource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "documents_replay"
-
-        def schema(self) -> str:
-            return "doc_id long, text string"
-
-        def simpleStreamReader(self, schema):
-            return _DocReplayReader(self.options)
-
-    spark.dataSource.register(_DocReplaySource)
-    return (
-        spark.readStream.format("documents_replay")
-        .option("path", path)
-        .option("batch_rows", str(batch_rows))
-        .load()
-    )
-
-
 def stream_token_drift_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming drift monitor: twin of the batch
     ``token_distribution_drift`` query (plans/llm_text.py). Documents
@@ -948,7 +840,7 @@ def stream_token_drift_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import textops
 
-    docs = documents_replay_stream(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir)
     tok = docs.select(
         F.explode(textops.tokens(F.col("text"))).alias("term"),
         (F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) < "4").alias(
@@ -1108,7 +1000,7 @@ def stream_heavy_hitters_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import textops
     from ..operators.relational import latest_per_key
 
-    docs = documents_replay_stream(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir)
     tok = docs.select(F.explode(textops.tokens(F.col("text"))).alias("term"))
 
     def update_count(key, pdfs, state):
@@ -1254,7 +1146,7 @@ def stream_banded_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _md5_banded, _shingle_base
     from ..plans.llm_text import _MH_BANDS, _MH_HASHES
 
-    base = _shingle_base(documents_replay_stream(spark, sf_dir), "doc_id", "text", 3)
+    base = _shingle_base(_documents_replay(spark, sf_dir), "doc_id", "text", 3)
     banded = _md5_banded(base, _MH_HASHES, _MH_BANDS)
 
     def first_writer(key, pdfs, state):
@@ -1298,73 +1190,6 @@ def stream_banded_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("int").alias("n_bands"),
         F.sum(F.col("dup_band").cast("int")).cast("int").alias("n_dup_bands"),
         (F.sum(F.col("dup_band").cast("int")) > 0).alias("is_dup"),
-    )
-
-
-def embeddings_replay_stream(
-    spark: SparkSession, sf_dir: str, batch_rows: int = 200
-) -> DataFrame:
-    """vec_id-ordered micro-batch replay of the embeddings table via
-    the Spark 4 Python Data Source streaming API — the vector-side
-    sibling of documents_replay_stream (same row-position offsets,
-    same pickling constraints). Embedding components arrive as doubles;
-    float32→double widening is value-exact, so downstream quantize()
-    produces the SAME integers as the batch parquet scan."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    path = f"{sf_dir}/embeddings.parquet"
-
-    class _EmbReplayReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "200"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path, columns=["vec_id", "embedding"])
-                self._tbl = t.take(
-                    pc.sort_indices(t, sort_keys=[("vec_id", "ascending")])
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter(
-                [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in sl]
-            )
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _EmbReplaySource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "embeddings_replay"
-
-        def schema(self) -> str:
-            return "vec_id long, embedding array<double>"
-
-        def simpleStreamReader(self, schema):
-            return _EmbReplayReader(self.options)
-
-    spark.dataSource.register(_EmbReplaySource)
-    return (
-        spark.readStream.format("embeddings_replay")
-        .option("path", path)
-        .option("batch_rows", str(batch_rows))
-        .load()
     )
 
 
@@ -1437,7 +1262,7 @@ def stream_ivf_ann_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     arriving = (
-        embeddings_replay_stream(spark, sf_dir)
+        _embeddings_replay(spark, sf_dir)
         .select(
             F.col("vec_id").alias("c_id"), quantize(F.col("embedding")).alias("c_vec")
         )
@@ -1600,7 +1425,7 @@ def stream_two_level_assign_state(spark: SparkSession, sf_dir: str) -> DataFrame
     for cell in fine.values():
         cell.sort()
 
-    arriving = embeddings_replay_stream(spark, sf_dir).select(
+    arriving = _embeddings_replay(spark, sf_dir).select(
         "vec_id", quantize(F.col("embedding")).alias("x")
     )
 
@@ -1669,7 +1494,7 @@ def stream_progressive_coverage_state(spark: SparkSession, sf_dir: str) -> DataF
     from ..operators import textops
     from ..plans.mlprep import _SPAN_N, _span_grams
 
-    docs = documents_replay_stream(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir)
     tok = docs.select("doc_id", textops.tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
@@ -1752,7 +1577,7 @@ def stream_sequence_packing_state(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import textops
     from ..plans.mlprep import _PACK_LEN
 
-    docs = documents_replay_stream(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir)
     lens = (
         docs.select(
             "doc_id", F.size(textops.tokens("text")).cast("bigint").alias("n")
@@ -1804,68 +1629,6 @@ def stream_sequence_packing_state(spark: SparkSession, sf_dir: str) -> DataFrame
     return emitted.orderBy("pack_id", "start_offset")
 
 
-def documents_replay_stream_with_source(
-    spark: SparkSession, sf_dir: str, batch_rows: int = 100
-) -> DataFrame:
-    """documents_replay_stream plus the source column (the quality-drift
-    twin groups by source) — same ordering, offsets, and pickling
-    constraints as the two-column reader."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    path = f"{sf_dir}/documents.parquet"
-
-    class _DocSrcReplayReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "100"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path, columns=["doc_id", "text", "source"])
-                self._tbl = t.take(
-                    pc.sort_indices(t, sort_keys=[("doc_id", "ascending")])
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter([(r["doc_id"], r["text"], r["source"]) for r in sl])
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _DocSrcReplaySource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "documents_src_replay"
-
-        def schema(self) -> str:
-            return "doc_id long, text string, source string"
-
-        def simpleStreamReader(self, schema):
-            return _DocSrcReplayReader(self.options)
-
-    spark.dataSource.register(_DocSrcReplaySource)
-    return (
-        spark.readStream.format("documents_src_replay")
-        .option("path", path)
-        .option("batch_rows", str(batch_rows))
-        .load()
-    )
-
-
 def stream_curriculum_state(
     spark: SparkSession, sf_dir: str, k: int = 10
 ) -> DataFrame:
@@ -1891,7 +1654,7 @@ def stream_curriculum_state(
     from ..operators import textops
     from ..plans.mlprep import _HQ_BUCKETS, _HQ_MOD, _HQ_MULT, _PACK_LEN
 
-    docs = documents_replay_stream(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir)
     toks = textops.tokens("text")
 
     def wt(tk):
@@ -2004,8 +1767,6 @@ def snapshot_events_replay_stream(spark: SparkSession, base_path: str) -> DataFr
     100 TB it is O(versions) metadata rows, never data-sized."""
     import os
 
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
     from ..sources.io import audit_vacuum_policy
 
     manifest = base_path + "_events.parquet"
@@ -2027,58 +1788,12 @@ def snapshot_events_replay_stream(spark: SparkSession, base_path: str) -> DataFr
             manifest,
         )
 
-    class _SnapEventsReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path)
-                self._tbl = t.take(
-                    pc.sort_indices(t, sort_keys=[("version", "ascending")])
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter(
-                [
-                    (r["version"], r["committed"], r["n_files"], r["bytes"])
-                    for r in sl
-                ]
-            )
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + 1, self._table().num_rows)  # ONE event per batch
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _SnapEventsSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "snapshot_events_replay"
-
-        def schema(self) -> str:
-            return "version long, committed boolean, n_files long, bytes long"
-
-        def simpleStreamReader(self, schema):
-            return _SnapEventsReader(self.options)
-
-    spark.dataSource.register(_SnapEventsSource)
-    return (
-        spark.readStream.format("snapshot_events_replay")
-        .option("path", manifest)
-        .load()
+    return _parquet_replay(  # ONE event per micro-batch
+        spark,
+        manifest,
+        "version long, committed boolean, n_files long, bytes long",
+        ["version"],
+        1,
     )
 
 
@@ -2178,88 +1893,29 @@ def stream_lineage_diff_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer diff (tests/test_streaming.py). Key space = one state
     row per document id (the RocksDB-sized shape, like the banded-dedup
     twin); per-key state is two fixed-width digests."""
-    import os
-
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     # stage the version-ordered landing log next to a fresh tmp base
-    import tempfile
-
-    stage_dir = tempfile.mkdtemp(prefix="lineage_stream_")
-    manifest = os.path.join(stage_dir, "events.parquet")
-    if not os.path.exists(manifest):
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        a = d.filter(F.col("doc_id") % 3 != 0).select(
-            F.lit(0).alias("side"), "doc_id", F.md5("text").alias("h")
-        )
-        b = d.filter(F.col("doc_id") % 5 != 0).select(
-            F.lit(1).alias("side"),
-            "doc_id",
-            F.md5(
-                F.when(
-                    F.col("doc_id") % 7 == 0,
-                    F.concat(F.lit("[rev2] "), F.col("text")),
-                ).otherwise(F.col("text"))
-            ).alias("h"),
-        )
-        a.unionByName(b).orderBy("side", "doc_id").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(manifest)
-
-    class _LineageEventsReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "200"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path)
-                self._tbl = t.take(
-                    pc.sort_indices(
-                        t,
-                        sort_keys=[("side", "ascending"), ("doc_id", "ascending")],
-                    )
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter([(r["side"], r["doc_id"], r["h"]) for r in sl])
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _LineageEventsSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "lineage_events_replay"
-
-        def schema(self) -> str:
-            return "side int, doc_id long, h string"
-
-        def simpleStreamReader(self, schema):
-            return _LineageEventsReader(self.options)
-
-    spark.dataSource.register(_LineageEventsSource)
-    events = (
-        spark.readStream.format("lineage_events_replay")
-        .option("path", manifest)
-        .load()
+    manifest = _stage_dir("lineage_stream_") + "/events.parquet"
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    a = d.filter(F.col("doc_id") % 3 != 0).select(
+        F.lit(0).alias("side"), "doc_id", F.md5("text").alias("h")
+    )
+    b = d.filter(F.col("doc_id") % 5 != 0).select(
+        F.lit(1).alias("side"),
+        "doc_id",
+        F.md5(
+            F.when(
+                F.col("doc_id") % 7 == 0,
+                F.concat(F.lit("[rev2] "), F.col("text")),
+            ).otherwise(F.col("text"))
+        ).alias("h"),
+    )
+    a.unionByName(b).orderBy("side", "doc_id").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(manifest)
+    events = _parquet_replay(
+        spark, manifest, "side int, doc_id long, h string", ["side", "doc_id"], 200
     )
 
     def fold(key, pdfs, state):
@@ -2345,7 +2001,7 @@ def stream_quality_drift_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         _QDRIFT_SHIFT,
     )
 
-    docs = documents_replay_stream_with_source(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir, "doc_id long, text string, source string")
     toks = textops.tokens("text")
 
     def wt(tk):
@@ -2456,75 +2112,21 @@ def stream_quality_drift_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def documents_epoch_replay_stream(
     spark: SparkSession, sf_dir: str, batch_rows: int = 100
 ) -> DataFrame:
-    """documents_replay_stream in EPOCH-SHUFFLE order: rows arrive
-    sorted by md5('1:' || doc_id) — the epoch-1 permutation of the
-    batch seeded_epoch_shuffle (plans/mlprep.py) — exactly the order a
+    """The documents table in EPOCH-SHUFFLE order: rows arrive sorted
+    by md5('1:' || doc_id) — the epoch-1 permutation of the batch
+    seeded_epoch_shuffle (plans/mlprep.py) — exactly the order a
     streaming data-loader would consume from the shuffled manifest.
-    The key is computed with hashlib in the reader (same lowercase hex
-    as Spark's md5/DuckDB's md5) and shipped alongside the row so the
-    stateful fold can re-assert intra-batch order."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+    The key is staged with the manifest's own Spark md5 expression and
+    shipped alongside the row so the stateful fold can re-assert
+    intra-batch order."""
+    from ..plans.mlprep import _manifest_shuffle_key
 
-    path = f"{sf_dir}/documents.parquet"
-
-    class _EpochReplayReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "100"))
-            self._rows_sorted = None
-
-        def _data(self):
-            if self._rows_sorted is None:
-                import hashlib
-
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path, columns=["doc_id", "n_chars"])
-                rows = [
-                    (
-                        hashlib.md5(f"1:{r['doc_id']}".encode()).hexdigest(),
-                        r["doc_id"],
-                        r["n_chars"],
-                    )
-                    for r in t.to_pylist()
-                ]
-                rows.sort()  # (key, doc_id): the total order
-                self._rows_sorted = rows
-            return self._rows_sorted
-
-        def _rows(self, start: int, end: int):
-            return iter(
-                [(d, n, k) for k, d, n in self._data()[start:end]]
-            )
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, len(self._data()))
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _EpochReplaySource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "documents_epoch_replay"
-
-        def schema(self) -> str:
-            return "doc_id long, n_chars long, key string"
-
-        def simpleStreamReader(self, schema):
-            return _EpochReplayReader(self.options)
-
-    spark.dataSource.register(_EpochReplaySource)
-    return (
-        spark.readStream.format("documents_epoch_replay")
-        .option("path", path)
-        .option("batch_rows", str(batch_rows))
-        .load()
+    staged = _stage_dir("epoch_shuffle_stage_") + "/docs"
+    spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "n_chars", _manifest_shuffle_key().alias("key")
+    ).write.parquet(staged)
+    return _parquet_replay(
+        spark, staged, "doc_id long, n_chars long, key string", ["key", "doc_id"], batch_rows
     )
 
 
@@ -2632,7 +2234,7 @@ def stream_contrastive_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__one", F.lit(1))
     )
     arriving = (
-        embeddings_replay_stream_with_label(spark, sf_dir)
+        _embeddings_replay(spark, sf_dir, "vec_id long, embedding array<double>, label int")
         .select(
             F.col("vec_id").alias("c_id"),
             quantize(F.col("embedding")).alias("c_vec"),
@@ -2711,73 +2313,6 @@ def stream_contrastive_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embeddings_replay_stream_with_label(
-    spark: SparkSession, sf_dir: str, batch_rows: int = 200
-) -> DataFrame:
-    """embeddings_replay_stream plus the label column (the contrastive
-    twin needs the side split) — same ordering, offsets, and pickling
-    constraints as the two-column reader."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    path = f"{sf_dir}/embeddings.parquet"
-
-    class _EmbLabReplayReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "200"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path, columns=["vec_id", "embedding", "label"])
-                self._tbl = t.take(
-                    pc.sort_indices(t, sort_keys=[("vec_id", "ascending")])
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter(
-                [
-                    (r["vec_id"], [float(x) for x in r["embedding"]], r["label"])
-                    for r in sl
-                ]
-            )
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _EmbLabReplaySource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "embeddings_label_replay"
-
-        def schema(self) -> str:
-            return "vec_id long, embedding array<double>, label int"
-
-        def simpleStreamReader(self, schema):
-            return _EmbLabReplayReader(self.options)
-
-    spark.dataSource.register(_EmbLabReplaySource)
-    return (
-        spark.readStream.format("embeddings_label_replay")
-        .option("path", path)
-        .option("batch_rows", str(batch_rows))
-        .load()
-    )
-
-
 def stream_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``embedding_decontamination``
     (plans/llm_vector.py), oriented the way production ingests: the
@@ -2817,7 +2352,7 @@ def stream_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("eval_id", "e_vec", "e_nrm", F.posexplode("keys").alias("tbl", "key"))
     )
     arriving = (
-        embeddings_replay_stream(spark, sf_dir)
+        _embeddings_replay(spark, sf_dir)
         .filter(~(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) < "4"))
         .select(
             F.col("vec_id").alias("c_id"),
@@ -2907,79 +2442,6 @@ def stream_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def orders_replay_stream(
-    spark: SparkSession, sf_dir: str, batch_rows: int = 2000
-) -> DataFrame:
-    """o_orderkey-ordered micro-batch replay of the orders table via
-    the Spark 4 Python Data Source streaming API — the fact-table
-    sibling of embeddings_replay_stream (same row-position offsets,
-    same pickling constraints). o_totalprice arrives as the SAME
-    parquet double the batch scan reads, so dec2()/cents derivations
-    downstream are bit-identical to batch."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    path = f"{sf_dir}/orders.parquet"
-
-    class _OrdReplayReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "2000"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(
-                    self._path,
-                    columns=["o_orderkey", "o_orderpriority", "o_totalprice"],
-                )
-                self._tbl = t.take(
-                    pc.sort_indices(t, sort_keys=[("o_orderkey", "ascending")])
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter(
-                [
-                    (r["o_orderkey"], r["o_orderpriority"], float(r["o_totalprice"]))
-                    for r in sl
-                ]
-            )
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _OrdReplaySource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "orders_replay"
-
-        def schema(self) -> str:
-            return "o_orderkey long, o_orderpriority string, o_totalprice double"
-
-        def simpleStreamReader(self, schema):
-            return _OrdReplayReader(self.options)
-
-    spark.dataSource.register(_OrdReplaySource)
-    return (
-        spark.readStream.format("orders_replay")
-        .option("path", path)
-        .option("batch_rows", str(batch_rows))
-        .load()
-    )
-
-
 def stream_mv_maintenance_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MV maintenance twin: the batch
     ``incremental_mv_maintenance`` (plans/ingest.py) with the nightly
@@ -3007,7 +2469,13 @@ def stream_mv_maintenance_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numeric import d2d, dec2
 
     delta = (
-        orders_replay_stream(spark, sf_dir)
+        _parquet_replay(
+            spark,
+            f"{sf_dir}/orders.parquet",
+            "o_orderkey long, o_orderpriority string, o_totalprice double",
+            ["o_orderkey"],
+            2000,
+        )
         .filter(F.col("o_orderkey") % 4 == 0)
         .select(
             F.col("o_orderpriority").alias("priority"),
@@ -3166,7 +2634,7 @@ def stream_cluster_contamination_state(spark: SparkSession, sf_dir: str) -> Data
         )
     )
     arriving = (
-        embeddings_replay_stream(spark, sf_dir)
+        _embeddings_replay(spark, sf_dir)
         .filter(~(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) < "4"))
         .select(
             F.col("vec_id").alias("c_id"),
@@ -3290,17 +2758,9 @@ def staged_delta_docs_stream(
     twins freeze cluster membership), so the twin stages its output to
     a parquet and the reader ships (key, doc_id, n_chars) rows in
     (key, doc_id) order in disjoint micro-batches."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
     from ..plans.mlprep import _decon_kept_with_arrival, _manifest_shuffle_key
 
-    staged_root = tempfile.mkdtemp(prefix="manifest_delta_stage_")
-    atexit.register(shutil.rmtree, staged_root, ignore_errors=True)
-    staged = staged_root + "/delta"
+    staged = _stage_dir("manifest_delta_stage_") + "/delta"
     (
         _decon_kept_with_arrival(spark, sf_dir)
         .filter(F.col("is_new"))
@@ -3312,57 +2772,8 @@ def staged_delta_docs_stream(
         .write.parquet(staged)
     )
 
-    class _StagedDeltaReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "40"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(self._path, columns=["k", "doc_id", "n_chars"])
-                self._tbl = t.take(
-                    pc.sort_indices(
-                        t, sort_keys=[("k", "ascending"), ("doc_id", "ascending")]
-                    )
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter([(r["k"], r["doc_id"], r["n_chars"]) for r in sl])
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _StagedDeltaSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "manifest_delta_replay"
-
-        def schema(self) -> str:
-            return "k string, doc_id long, n_chars long"
-
-        def simpleStreamReader(self, schema):
-            return _StagedDeltaReader(self.options)
-
-    spark.dataSource.register(_StagedDeltaSource)
-    return (
-        spark.readStream.format("manifest_delta_replay")
-        .option("path", staged)
-        .option("batch_rows", str(batch_rows))
-        .load()
+    return _parquet_replay(
+        spark, staged, "k string, doc_id long, n_chars long", ["k", "doc_id"], batch_rows
     )
 
 
@@ -3514,7 +2925,7 @@ def stream_gate_backfill_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import textops
     from ..plans.mlprep import _gate_v2_keep
 
-    docs = documents_replay_stream(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir)
     flags = textops.gopher_quality_flags(F.col("text"))
     v = docs.select(
         F.expr("doc_id div 32").cast("bigint").alias("shard"),
@@ -3599,7 +3010,7 @@ def stream_mojibake_repair_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..plans.llm_text import moji_doc_audit
 
-    docs = documents_replay_stream_with_source(spark, sf_dir)
+    docs = _documents_replay(spark, sf_dir, "doc_id long, text string, source string")
     flags = moji_doc_audit(docs)
 
     def moji_fold(key, pdfs, state):
@@ -3683,7 +3094,7 @@ def stream_fim_plan_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..plans.mlprep import fim_doc_plan
 
-    docs = documents_replay_stream_with_source(spark, sf_dir).select(
+    docs = _documents_replay(spark, sf_dir, "doc_id long, text string, source string").select(
         "doc_id", "source", F.length("text").cast("bigint").alias("n_chars")
     )
     plan = fim_doc_plan(docs).withColumn(
@@ -3761,78 +3172,6 @@ def stream_fim_plan_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def staged_affected_roster_stream(
-    spark: SparkSession, roster_path: str, batch_rows: int = 48
-) -> DataFrame:
-    """Replay a staged affected-batch roster (batch_id, doc_id,
-    n_chars, is_blast) in (batch_id, doc_id) order in disjoint
-    micro-batches — the excision repairer's work feed: the incident
-    response streams each contaminated batch's membership through the
-    repair fold as it is pulled from the shipped assignment."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    class _RosterReader(SimpleDataSourceStreamReader):
-        def __init__(self, opts):
-            self._path = opts["path"]
-            self._batch = int(opts.get("batch_rows", "48"))
-            self._tbl = None
-
-        def _table(self):
-            if self._tbl is None:
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                t = pq.read_table(
-                    self._path, columns=["batch_id", "doc_id", "n_chars", "is_blast"]
-                )
-                self._tbl = t.take(
-                    pc.sort_indices(
-                        t,
-                        sort_keys=[
-                            ("batch_id", "ascending"),
-                            ("doc_id", "ascending"),
-                        ],
-                    )
-                )
-            return self._tbl
-
-        def _rows(self, start: int, end: int):
-            sl = self._table().slice(start, max(0, end - start)).to_pylist()
-            return iter(
-                [(r["batch_id"], r["doc_id"], r["n_chars"], r["is_blast"]) for r in sl]
-            )
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def read(self, start):
-            s = start["row"]
-            e = min(s + self._batch, self._table().num_rows)
-            return self._rows(s, e), {"row": e}
-
-        def readBetweenOffsets(self, start, end):
-            return self._rows(start["row"], end["row"])
-
-    class _RosterSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "excision_roster_replay"
-
-        def schema(self) -> str:
-            return "batch_id long, doc_id long, n_chars long, is_blast boolean"
-
-        def simpleStreamReader(self, schema):
-            return _RosterReader(self.options)
-
-    spark.dataSource.register(_RosterSource)
-    return (
-        spark.readStream.format("excision_roster_replay")
-        .option("path", roster_path)
-        .option("batch_rows", str(batch_rows))
-        .load()
-    )
-
-
 def stream_excision_repair_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``manifest_excision_repair``
     (plans/mlprep.py): the blast-radius plan's EXECUTOR run as the
@@ -3851,10 +3190,6 @@ def stream_excision_repair_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (repaired=true) union the carried v1 stats (batch side, identical
     expressions) and the result must equal the batch op's v2 output
     bit-for-bit (tests/test_streaming.py; RocksDB parity matrix)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..plans.mlprep import (
@@ -3865,9 +3200,7 @@ def stream_excision_repair_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign, blast = _excision_assign_and_blast(spark, sf_dir)
     affected = assign.join(blast, "doc_id", "left_semi").select("batch_id").distinct()
 
-    staged_root = tempfile.mkdtemp(prefix="excision_roster_stage_")
-    atexit.register(shutil.rmtree, staged_root, ignore_errors=True)
-    roster_path = staged_root + "/roster"
+    roster_path = _stage_dir("excision_roster_stage_") + "/roster"
     (
         assign.join(F.broadcast(affected), "batch_id", "left_semi")
         .join(blast.withColumn("is_blast", F.lit(True)), "doc_id", "left")
@@ -3880,7 +3213,13 @@ def stream_excision_repair_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.parquet(roster_path)
     )
 
-    rows = staged_affected_roster_stream(spark, roster_path)
+    rows = _parquet_replay(
+        spark,
+        roster_path,
+        "batch_id long, doc_id long, n_chars long, is_blast boolean",
+        ["batch_id", "doc_id"],
+        48,
+    )
 
     def repair_fold(key, pdfs, state):
         # self-contained (pickled by value): no references to this module

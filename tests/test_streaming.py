@@ -42,29 +42,6 @@ def test_replay_source_tumbling_matches_batch(spark):
     assert not compare_frames(streamed, batch)
 
 
-def test_tws_counts_or_documented_gate(spark):
-    """transformWithState runs where protobuf exists; in this container
-    it must fail fast with the documented remediation, not deep inside
-    a stage."""
-    import pytest
-
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="transformWithState requires"):
-            jobs.stream_user_event_counts_tws(spark, SF_SMOKE)
-        return
-    out = jobs.stream_user_event_counts_tws(spark, SF_SMOKE).toPandas()
-    batch = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy("user_id")
-        .count()
-        .withColumnRenamed("count", "n_events")
-        .toPandas()
-    )
-    assert not compare_frames(out, batch)
-
-
 def test_stream_sessions_match_batch(spark):
     streamed = jobs.stream_session_windows(spark, SF_SMOKE).toPandas()
     batch = session_windows_30m(spark, SF_SMOKE).toPandas()
