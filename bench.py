@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Headline benchmark: runs the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on)
+and prints ONE JSON line:
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>}
@@ -55,12 +56,13 @@ def compact_metric_line(out: dict, cap: int = 1500) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     from etl_showcase_spark.caching import release_all
     from etl_showcase_spark.registry import bench_specs
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     spark = get_spark(
         app_name="etl-showcase-bench",

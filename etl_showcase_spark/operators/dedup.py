@@ -615,6 +615,7 @@ def _simhash_pairs(
     n_bits: int,
     max_hamming: int,
     block_bits: int,
+    n_part: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: block on each of the n_bits/block_bits
     chunks, then verify the true Hamming distance with bit_count.
@@ -625,10 +626,19 @@ def _simhash_pairs(
     Arrow-vectorized bit-vote UDF (r14, guide §4.2), replacing n_bits
     interpreted higher-order `aggregate` folds per row; bit-identical
     to the _simhash_fold spelling (tests/test_dedup.py asserts
-    equality on the corpus)."""
-    tok_hashes = F.transform(tokens(F.col(text_col)), token_hash)
-    sigs = df.select(
-        F.col(id_col).alias("__id"),
+    equality on the corpus).
+
+    ``n_part`` repartitions by id ahead of the vote UDF, as
+    _shingle_base does for the MinHash signature: it sets how many
+    Python workers the stage runs on, so callers derive it from the
+    input's bytes (catalog.derived_width) instead of inheriting the
+    scan's file count. None keeps the input's partitioning."""
+    base = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+    if n_part is not None:
+        base = base.repartition(n_part, F.col("__id"))
+    tok_hashes = F.transform(tokens(F.col("__t")), token_hash)
+    sigs = base.select(
+        "__id",
         _simhash_sig_udf(n_bits)(tok_hashes).alias("__sig"),
     # the signature frame feeds BOTH sides of the block self-join —
     # persist() computes the per-doc simhash once, not twice
@@ -677,13 +687,17 @@ def simhash_md5_pairs(
     text_col: str,
     max_hamming: int = 3,
     block_bits: int = 8,
+    n_part: int | None = None,
 ) -> DataFrame:
     """simhash_neardup_pairs' verifiability twin on the 32-bit md5
     signature. Same pigeonhole recall guarantee (max_hamming <=
     n_blocks-1 → recall 1); every step is replayable in ANSI SQL, so
     this variant carries the hash-checked CORRECTNESS row for the
-    SimHash pipeline. Returns (id_a, id_b, hamming)."""
-    return _simhash_pairs(df, id_col, text_col, _md5_token_hash, 32, max_hamming, block_bits)
+    SimHash pipeline. Returns (id_a, id_b, hamming); ``n_part`` sizes
+    the signature stage (see _simhash_pairs)."""
+    return _simhash_pairs(
+        df, id_col, text_col, _md5_token_hash, 32, max_hamming, block_bits, n_part
+    )
 
 
 def simhash_neardup_pairs(
@@ -692,9 +706,11 @@ def simhash_neardup_pairs(
     text_col: str,
     max_hamming: int = 3,
     block_bits: int = 16,
+    n_part: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup candidates over the 64-bit xxhash64 signature.
-    Returns (id_a, id_b, hamming).
+    Returns (id_a, id_b, hamming); ``n_part`` sizes the signature stage
+    (see _simhash_pairs).
 
     Recall guarantee (pigeonhole): with n_blocks chunks, a pair at
     Hamming distance < n_blocks MUST share at least one exact chunk —
@@ -702,7 +718,9 @@ def simhash_neardup_pairs(
     A looser max_hamming still works but is probabilistic-recall AND
     candidate-heavy: at sf0.1 the 138k hamming<=12 pairs are ~100× the
     hamming<=3 set — exactly the blowup a 100 TB corpus can't afford."""
-    return _simhash_pairs(df, id_col, text_col, _xxhash_token_hash, 64, max_hamming, block_bits)
+    return _simhash_pairs(
+        df, id_col, text_col, _xxhash_token_hash, 64, max_hamming, block_bits, n_part
+    )
 
 
 def minhash_lsh_clusters_md5(

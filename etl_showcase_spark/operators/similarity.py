@@ -571,6 +571,7 @@ def lsh_neardup_pairs(
     n_planes: int = 6,
     dim: int = 64,
     n_tables: int = 8,
+    n_part: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via hyperplane-LSH blocking — the
     100 TB path (replaces the all-pairs self-join, which is a cartesian
@@ -588,7 +589,16 @@ def lsh_neardup_pairs(
     fully deterministic (literal ±1 planes, exact integer dots), so an
     independent engine reproduces the exact pair set — the DuckDB
     oracle in plans/llm_vector.py mirrors it bit-for-bit.
+
+    ``n_part`` repartitions the input by id ahead of the GEMM bucket
+    pass and the quantize+norm pass. The bucket pass is an Arrow UDF
+    and PySpark keeps one worker process per concurrently running
+    Python task, so callers derive the width from the input's bytes
+    (catalog.derived_width) instead of inheriting the scan's file
+    count. None keeps the input's partitioning.
     """
+    if n_part is not None:
+        df = df.repartition(n_part, F.col(id_col))
     # both frames feed two consumers each (the posting self-join's two
     # sides; the verify join on id_a and id_b) — persist() runs the
     # GEMM bucket pass and the quantize+norm pass once instead of twice
@@ -615,6 +625,10 @@ def lsh_neardup_pairs(
     # verify joins reuse the partitioning (no extra exchange). The
     # bucket self-join itself stays under AQE so its skew handling
     # keeps splitting hot buckets at scale (the r13 minhash finding).
+    # This width stays cores-wide rather than n_part: the verify cost
+    # is bound by the candidate count, not by input bytes (0.8 MB of
+    # embeddings at sf0.1 derives ONE task, which would bring the
+    # single-task verify stage back).
     width = df.sparkSession.sparkContext.defaultParallelism
     cand = (
         pa.join(pb, ["tbl", "key"])

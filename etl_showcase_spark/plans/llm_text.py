@@ -247,6 +247,17 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Bytes of `documents` one task of a Python-UDF signature stage (the
+# MinHash minima, the SimHash bit votes) must be worth (round-13
+# optimization): 64 KiB of compressed text prices the regex tokenize +
+# per-token hash at ~100× plain scan cost. A width derived
+# from it is ~10 tasks at sf0.1 instead of 32 (measured 1.4s→0.95s on
+# MinHash — the cores-wide Python stage was floor-bound) and reaches
+# cores-wide by sf1. PySpark keeps one worker process per concurrently
+# running Python task, so the width is also the stage's worker count.
+_DOC_UDF_CHUNK = 64 << 10
+
+
 @register("minhash_lsh_neardup", oracle=None, tags=("L2",), bench=True)
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fanout=False: minhash_lsh_pairs repartitions by __id itself — the
@@ -261,12 +272,7 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=8,
         shingle_n=3,
         jaccard_threshold=0.3,
-        # signature width from input bytes (r13 optimization, guide
-        # §2.2): ~10 tasks at sf0.1 instead of 32 (measured 1.4s→0.95s —
-        # the cores-wide Python stage was floor-bound), cores-wide again
-        # by sf1. 64 KiB of compressed text/task prices the regex
-        # tokenize + shingle hash at ~100× plain scan cost.
-        n_part=derived_width(spark, sf_dir, "documents", 64 << 10),
+        n_part=derived_width(spark, sf_dir, "documents", _DOC_UDF_CHUNK),
     )
 
 
@@ -351,8 +357,16 @@ def minhash_md5_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("simhash_neardup", oracle=None, tags=("L2",))
 def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    return simhash_neardup_pairs(d, "doc_id", "text", max_hamming=3)
+    # fanout=False: the pair operator repartitions by id itself, at the
+    # size-derived width of its vote UDF
+    d = table(spark, sf_dir, "documents", fanout=False)
+    return simhash_neardup_pairs(
+        d,
+        "doc_id",
+        "text",
+        max_hamming=3,
+        n_part=derived_width(spark, sf_dir, "documents", _DOC_UDF_CHUNK),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -408,13 +422,14 @@ WHERE bit_count(xor(a.sig, b.sig)) <= {_SH_MAX_HAMMING}
 def simhash_md5_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_md5_pairs
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", fanout=False)
     return simhash_md5_pairs(
         d,
         "doc_id",
         "text",
         max_hamming=_SH_MAX_HAMMING,
         block_bits=_SH_BLOCK_BITS,
+        n_part=derived_width(spark, sf_dir, "documents", _DOC_UDF_CHUNK),
     )
 
 

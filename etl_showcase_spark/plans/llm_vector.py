@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
 
-from ..catalog import table
+from ..catalog import FANOUT_CHUNKS, derived_width, table
 from ..operators.similarity import (
     _plane_signs,
     brute_force_topk,
@@ -184,9 +184,18 @@ WHERE CAST(list_dot_product(x.qv, y.qv) AS DOUBLE) / (x.nrm * y.nrm) >= {_ND_THR
 """
 
 
+def _lsh_width(spark: SparkSession, sf_dir: str) -> int:
+    """Width of lsh_neardup_pairs' bucket and norm passes: derived from
+    the bytes of `embeddings` with the catalog's own embeddings chunk,
+    so the Arrow GEMM stage runs as many Python workers as the input is
+    worth, not one per scanned file."""
+    return derived_width(spark, sf_dir, "embeddings", FANOUT_CHUNKS["embeddings"])
+
+
 @register("embedding_neardup_pairs", oracle=_neardup_lsh_oracle(), tags=("L2", "L3"))
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "embeddings")
+    # fanout=False: lsh_neardup_pairs repartitions by id itself
+    e = table(spark, sf_dir, "embeddings", fanout=False)
     return lsh_neardup_pairs(
         e,
         "vec_id",
@@ -195,6 +204,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=_ND_PLANES,
         dim=_ND_DIM,
         n_tables=_ND_TABLES,
+        n_part=_lsh_width(spark, sf_dir),
     )
 
 
@@ -1285,6 +1295,7 @@ def embedding_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=_ND_PLANES,
         dim=_ND_DIM,
         n_tables=_ND_TABLES,
+        n_part=_lsh_width(spark, sf_dir),
     )
     cc = connected_components(pairs, "id_a", "id_b")
     rep_label = reps.join(cc, reps["rep_id"] == cc["id"], "left").select(
@@ -1665,7 +1676,7 @@ FROM r GROUP BY eval_id
 def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = table(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings", fanout=False)
     pairs = lsh_neardup_pairs(
         e,
         "vec_id",
@@ -1674,6 +1685,7 @@ def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=_ND_PLANES,
         dim=_ND_DIM,
         n_tables=_ND_TABLES,
+        n_part=_lsh_width(spark, sf_dir),
     )
     a_eval = F.substring(F.md5(F.col("id_a").cast("string")), 1, 1) < "4"
     b_eval = F.substring(F.md5(F.col("id_b").cast("string")), 1, 1) < "4"

@@ -13,7 +13,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """Local task slots: ``$SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may run on (what ``nproc`` prints). The one default for
+    the session, bench.py and the scripts; a fixed figure above the
+    box's cores only oversubscribes it."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def runtime_filter_conf(test_scale: bool = False) -> dict[str, str]:
@@ -61,13 +72,12 @@ def get_spark(
     (the reference's staging overwrite, transform_weather.py:171, does
     not survive 100 TB).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{default_cpus()}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or default_cpus()),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")

@@ -34,11 +34,12 @@ def main() -> None:
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from etl_showcase_spark.caching import release_all
     from etl_showcase_spark.registry import queries
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     spark = get_spark(
         app_name="etl-showcase-profile",

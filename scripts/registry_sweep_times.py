@@ -23,11 +23,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     if "--sf" in sys.argv:
         sf_dir = sys.argv[sys.argv.index("--sf") + 1]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from etl_showcase_spark.caching import release_all
     from etl_showcase_spark.registry import all_specs
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     spark = get_spark(
         app_name="registry-sweep-times",

@@ -85,9 +85,9 @@ def main() -> int:
 
     from etl_showcase_spark.plans import mlprep
     from etl_showcase_spark.plans.mlprep import _repack_apply_v2, _repack_land_v1
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.session import default_cpus, get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = get_spark(
         app_name="repack-delta-stress",
         master=f"local[{cpus}]",

@@ -36,6 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from etl_showcase_spark.session import default_cpus  # noqa: E402
+
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
@@ -109,7 +111,7 @@ def build_lake(spark: SparkSession, mult: int, out_dir: str) -> None:
             ).withColumn("n_chars", F.length("text"))
         (
             reps.drop("__rep")
-            .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+            .repartition(default_cpus())
             .write.mode("overwrite")
             .parquet(f"{out_dir}/{t}.parquet")
         )

@@ -71,9 +71,9 @@ def main() -> None:
     args = ap.parse_args()
     ops = args.queries.split(",") if args.queries else NEW_OPS
 
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.session import default_cpus, get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = get_spark(
         app_name="scale-stress-newops",
         master=f"local[{cpus}]",

@@ -85,11 +85,11 @@ def main() -> int:
 
     from etl_showcase_spark import observability
     from etl_showcase_spark.operators.relational import salted_join
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.session import default_cpus, get_spark
 
     import pyspark.sql.functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = get_spark(
         app_name="skew-ab",
         master=f"local[{cpus}]",

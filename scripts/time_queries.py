@@ -34,11 +34,12 @@ def main() -> None:
         out_path = args[i + 1]
         del args[i : i + 2]
     names = args
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from etl_showcase_spark.caching import release_all
     from etl_showcase_spark.registry import all_specs
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     spark = get_spark(
         app_name="time-queries",

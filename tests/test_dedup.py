@@ -5,8 +5,10 @@ values, and the LSH scale paths must agree with their exact baselines."""
 from __future__ import annotations
 
 import hashlib
+import re
 from pathlib import Path
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +18,11 @@ from etl_showcase_spark.operators.dedup import (
     simhash_neardup_pairs,
     simhash64,
 )
-from etl_showcase_spark.operators.similarity import brute_force_topk, lsh_ann_topk
+from etl_showcase_spark.operators.similarity import (
+    brute_force_topk,
+    lsh_ann_topk,
+    lsh_neardup_pairs,
+)
 from etl_showcase_spark.operators.textops import tokens
 
 from .conftest import SF_SMOKE
@@ -155,3 +161,51 @@ def test_ivf_ann_recall_vs_brute_force(spark):
         queries, e, "vec_id", "vec_id", "embedding", k=10, n_centroids=16, n_probe=4
     )
     assert {(r.q_id, r.c_id) for r in again.collect()} == approx_set
+
+
+@pytest.mark.parametrize("op", ["simhash_neardup_pairs", "lsh_neardup_pairs"])
+def test_udf_stage_width_never_changes_output(spark, op):
+    """The near-dup family's Python-UDF stages run at a size-derived
+    width (``n_part``). The width decides how many tasks, and so how
+    many Python workers, run the signature stage — never what the
+    operator emits: n_part 1, 3 and None (the input's own partitioning)
+    give the same canonical frame on the committed fixture, and an
+    explicit width is the id-keyed exchange feeding that stage."""
+    from etl_showcase_spark.caching import release_all
+    from etl_showcase_spark.plans import llm_vector as lv
+    from etl_showcase_spark.testing import canonicalize
+
+    def build(n_part):
+        if op == "simhash_neardup_pairs":
+            docs = spark.read.parquet(f"{FIXTURE_SF}/documents.parquet")
+            return simhash_neardup_pairs(docs, "doc_id", "text", max_hamming=3, n_part=n_part)
+        emb = spark.read.parquet(f"{FIXTURE_SF}/embeddings.parquet")
+        return lsh_neardup_pairs(
+            emb,
+            "vec_id",
+            "embedding",
+            threshold=lv._ND_THRESH,
+            n_planes=lv._ND_PLANES,
+            dim=lv._ND_DIM,
+            n_tables=lv._ND_TABLES,
+            n_part=n_part,
+        )
+
+    frames = {}
+    for n_part in (1, 3, None):
+        out = build(n_part)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        widths = {
+            1 if single else int(n)
+            for single, n in re.findall(
+                r"Exchange (?:(SinglePartition)|hashpartitioning\(\w+#\d+L, (\d+)\)), "
+                r"REPARTITION_BY_NUM",
+                plan,
+            )
+        }
+        assert widths == (set() if n_part is None else {n_part}), (n_part, widths)
+        frames[n_part] = canonicalize(out.toPandas())
+        release_all()
+    assert len(frames[None]) > 0
+    for n_part in (1, 3):
+        pd.testing.assert_frame_equal(frames[n_part], frames[None])

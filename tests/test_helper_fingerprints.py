@@ -79,6 +79,12 @@ HELPERS = [
     "etl_showcase_spark.operators.dedup:_md5_banded",
     "etl_showcase_spark.operators.dedup:_simhash_sig_udf",
     "etl_showcase_spark.operators.dedup:_simhash_pairs",
+    # the embedding-LSH pair operator (embedding_neardup_pairs,
+    # embedding_neardup_clusters, embedding_decontamination,
+    # cluster_contamination_report) and the connected-components
+    # labeller every clustering query ends in
+    "etl_showcase_spark.operators.similarity:lsh_neardup_pairs",
+    "etl_showcase_spark.operators.graph:connected_components",
 ]
 
 
