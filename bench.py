@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -58,32 +57,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    from etl_showcase_spark.caching import release_all
     from etl_showcase_spark.registry import bench_specs
-    from etl_showcase_spark.session import default_cpus, get_spark
+    from etl_showcase_spark.timing import session, time_runs
 
-    cpus = default_cpus()
-
-    spark = get_spark(
-        app_name="etl-showcase-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.ui.enabled": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("etl-showcase-bench", sf_dir)
 
     # registered queries are already scale-aware (stride-capped ANN
     # query sets, LSH-bucketed near-dup) — bench runs them as registered
     suite = {name: spec.build for name, spec in sorted(bench_specs().items())}
-
-    # JVM/catalog warmup so the first query doesn't pay session startup,
-    # plus one tiny mapInPandas so the Python worker pool + Arrow are
-    # spawned before any timed query (one-time process cost, not query
-    # cost)
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).count()
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.mode("overwrite").format("noop").save()
 
     # Calibration canary FIRST: a frozen, JVM-only scan-agg
     # (bench_canary.py, pinned by a source-hash test, never edited).
@@ -93,26 +74,10 @@ def main() -> None:
     # variance.
     from bench_canary import canary_query
 
-    def canary_sample(reps: int = 4) -> float:
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            canary_query(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+    def canary_sample(warmups: int = 0) -> float:
+        return time_runs(spark, lambda: canary_query(spark, sf_dir), warmups).best
 
-    for _ in range(2):
-        canary_query(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    canary_best = canary_sample()
-
-    # 2 untimed warm-ups + best-of-4 timed: the expression-heavy
-    # queries (MinHash's 32 array_min(transform) chains) generate huge
-    # codegen methods that HotSpot only reaches steady state on after
-    # several executions — timing those early runs reports C2/GC
-    # jitter, not query cost. Warm-ups run the identical plan, so the
-    # timed min() is the steady-state number a long-running cluster
-    # would see.
-    from etl_showcase_spark import observability
+    canary_best = canary_sample(warmups=2)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -125,30 +90,13 @@ def main() -> None:
         # not just its edges
         if qi == mid_at:
             canary_mid = canary_sample()
-        best = float("inf")
-        try:
-            # shuffle observability: meter the FIRST (cold) warm-up rep —
-            # the same conditioning tests/test_pipeline_integrity.py's
-            # SHUFFLE_BUDGETS are measured under (cold fresh build, no
-            # per-query persisted cache warm yet), so the published
-            # shuffle figures and the pinned budgets are one number
-            for warm in range(2):
-                pre = observability.snapshot(spark) if warm == 0 else None
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                if pre is not None:
-                    stats = observability.delta(pre, observability.snapshot(spark))
-                    shuffle[name] = stats.as_dict()
-            for _rep in range(4):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                best = min(best, time.perf_counter() - t0)
-        except Exception as e:  # one broken query must not lose the suite
-            errors[name] = f"{type(e).__name__}: {str(e)[:120]}"
-        # keep any completed repetition's timing so a late failure can
-        # never make the headline total look FASTER than a healthy run
-        if best != float("inf"):
-            timings[name] = round(best, 3)
-        release_all()  # operator caches are per-query; don't accumulate
+        runs = time_runs(spark, lambda: fn(spark, sf_dir))
+        if runs.shuffle is not None:
+            shuffle[name] = runs.shuffle.as_dict()
+        if runs.error:  # one broken query must not lose the suite
+            errors[name] = runs.error
+        if runs.reps:
+            timings[name] = round(runs.best, 3)
 
     # POST-suite canary (round 11): the pre-suite sample alone cannot
     # detect BURSTY load arriving mid-suite (observed: the canary swung

@@ -85,15 +85,10 @@ def main() -> int:
 
     from etl_showcase_spark.plans import mlprep
     from etl_showcase_spark.plans.mlprep import _repack_apply_v2, _repack_land_v1
-    from etl_showcase_spark.session import default_cpus, get_spark
+    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.timing import time_runs
 
-    cpus = default_cpus()
-    spark = get_spark(
-        app_name="repack-delta-stress",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.ui.enabled": "false"},
-    )
+    spark = get_spark("repack-delta-stress", extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     from etl_showcase_spark.plans.mlprep import _REPACK_SHARD, _sharded_pack_manifest
@@ -152,13 +147,10 @@ def main() -> int:
             ("recompute_work", run_recompute_work),
             ("apply_v2_full", run_apply),
         ):
-            fn()  # warm
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                fn()
-                best = min(best, time.perf_counter() - t0)
-            timings.setdefault(label, {})[phase] = round(best, 3)
+            runs = time_runs(spark, fn, warmups=1, reps=3)
+            if runs.error:
+                raise RuntimeError(f"{label} {phase}: {runs.error}")
+            timings.setdefault(label, {})[phase] = round(runs.best, 3)
 
         # invariant: the recomputed pack set is identical at any base
         v2 = _repack_apply_v2(spark, per_doc, root)

@@ -12,13 +12,15 @@ per-replica suffix token so replicas become NEAR-duplicates — a
 realistic (and adversarial) corpus for the MinHash/SimHash/LSH family
 instead of a degenerate exact-copy one.
 
-Then runs the bench suite at both scales and reports the per-query
+Then runs the bench suite (or the --queries list) at both scales,
+with the bench's timing harness, and reports the per-query
 scaling exponent alpha where time ~ volume^alpha (alpha <= ~1 is the
 linear-or-better target; the stride-capped ANN queries should sit well
 below 1 because their query set is O(1) in corpus size).
 
 Usage:
-    python scripts/scale_stress.py [--mult 10] [--keep]
+    python scripts/scale_stress.py [--mult 10] [--queries a,b,...] [--keep]
+        [--reuse-lake] [--build-only] [--out FILE]
 """
 
 from __future__ import annotations
@@ -117,21 +119,20 @@ def build_lake(spark: SparkSession, mult: int, out_dir: str) -> None:
         )
 
 
-def run_suite(spark: SparkSession, sf_dir: str, reps: int = 3) -> dict[str, float]:
-    from etl_showcase_spark.caching import release_all
-    from etl_showcase_spark.registry import bench_specs
+def run_suite(spark: SparkSession, sf_dir: str, names: list[str]) -> dict[str, float | None]:
+    """1 warm-up + best of 3 per query (etl_showcase_spark/timing.py);
+    None for a query that failed."""
+    from etl_showcase_spark.registry import all_specs
+    from etl_showcase_spark.timing import time_runs
 
-    out: dict[str, float] = {}
-    for name, spec in sorted(bench_specs().items()):
-        best = float("inf")
-        spec.build(spark, sf_dir).write.mode("overwrite").format("noop").save()  # warm
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            spec.build(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
-        release_all()
-        print(f"  {sf_dir.split('/')[-1]} {name}: {out[name]}s", flush=True)
+    specs = all_specs()
+    out: dict[str, float | None] = {}
+    for name in names:
+        fn = specs[name].build
+        runs = time_runs(spark, lambda: fn(spark, sf_dir), warmups=1, reps=3)
+        out[name] = round(runs.best, 3) if runs.reps else None
+        shown = f"{out[name]}s" if runs.reps else runs.error
+        print(f"  {sf_dir.split('/')[-1]} {name}: {shown}", flush=True)
     return out
 
 
@@ -156,12 +157,18 @@ def main() -> None:
         help="build (and verify) the lake, then exit without timing — for "
         "harnesses that run their own measurements over it (implies --keep)",
     )
+    ap.add_argument(
+        "--queries",
+        default=None,
+        help="comma-separated registered-query names to time instead of the bench set",
+    )
     args = ap.parse_args()
 
-    from etl_showcase_spark.session import get_spark
+    from etl_showcase_spark.registry import bench_specs
+    from etl_showcase_spark.timing import session
 
-    spark = get_spark(app_name="scale-stress", extra_conf={"spark.ui.enabled": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
+    names = args.queries.split(",") if args.queries else sorted(bench_specs())
+    spark = session("scale-stress", BASE)
 
     out_dir = os.path.join(SCRATCH, f"mult{args.mult}")
     if args.reuse_lake and os.path.isdir(f"{out_dir}/lineitem.parquet"):
@@ -189,16 +196,18 @@ def main() -> None:
         spark.stop()
         return
 
-    base = run_suite(spark, BASE)
-    big = run_suite(spark, out_dir)
+    base = run_suite(spark, BASE, names)
+    big = run_suite(spark, out_dir, names)
     report = {}
-    for name in base:
-        # alpha: time ~ volume^alpha; guard tiny timings with a floor
-        b, g = max(base[name], 0.05), max(big.get(name, float("nan")), 0.05)
+    for name in names:
+        b, g = base[name], big[name]
         report[name] = {
-            "base_s": base[name],
-            f"x{args.mult}_s": big.get(name),
-            "alpha": round(math.log(g / b) / math.log(args.mult), 2),
+            "base_s": b,
+            f"x{args.mult}_s": g,
+            # alpha: time ~ volume^alpha; guard tiny timings with a floor
+            "alpha": None
+            if b is None or g is None
+            else round(math.log(max(g, 0.05) / max(b, 0.05)) / math.log(args.mult), 2),
         }
     payload = {
         "mult": args.mult,
@@ -206,9 +215,10 @@ def main() -> None:
         "note": (
             "synthetic headroom point: sf0.1 testdata replicated --mult times "
             "with disjoint key spaces (no sf1 parquet exists in /root/testdata); "
-            "alpha is the per-query scaling exponent time ~ volume^alpha"
+            "alpha is the per-query scaling exponent time ~ volume^alpha; "
+            + ("queries: --queries" if args.queries else "queries: the bench set")
         ),
-        "total_base_s": round(sum(base.values()), 3),
+        "total_base_s": round(sum(v for v in base.values() if v), 3),
         f"total_x{args.mult}_s": round(sum(v for v in big.values() if v), 3),
         "queries": report,
     }

@@ -25,7 +25,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -83,19 +82,14 @@ def main() -> int:
     stats = build_lake(args.replicate)
     print(f"lake: {stats}")
 
-    from etl_showcase_spark import observability
     from etl_showcase_spark.operators.relational import salted_join
     from etl_showcase_spark.session import default_cpus, get_spark
+    from etl_showcase_spark.timing import time_runs
 
     import pyspark.sql.functions as F
 
     cpus = default_cpus()
-    spark = get_spark(
-        app_name="skew-ab",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.ui.enabled": "false"},
-    )
+    spark = get_spark("skew-ab", extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     # skew detection reads COMPRESSED map-output sizes: this lake's hot
@@ -133,14 +127,10 @@ def main() -> int:
     baseline_rows = None
     for leg, (skew_conf, builder) in legs.items():
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skew_conf)
-        builder().write.mode("overwrite").format("noop").save()  # warm
-        best = float("inf")
-        for _ in range(3):
-            pre = observability.snapshot(spark)
-            t0 = time.perf_counter()
-            builder().write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-            shuf = observability.delta(pre, observability.snapshot(spark))
+        runs = time_runs(spark, builder, warmups=1, reps=3)
+        if runs.error:
+            raise RuntimeError(f"{leg}: {runs.error}")
+        shuf = runs.shuffle
         df = builder()
         df.collect()  # skew split exists only in the EXECUTED plan
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -156,7 +146,7 @@ def main() -> int:
             for a, b in zip(rows, baseline_rows)
         )
         out[leg] = {
-            "wall_s": round(best, 3),
+            "wall_s": round(runs.best, 3),
             "skew_split_in_plan": "skew=true" in plan,
             "salted": "__salt" in plan,
             "shuffle_write_bytes": shuf.shuffle_write_bytes,

@@ -12,11 +12,10 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.01")
 def spark():
     from etl_showcase_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    # local[default_cpus()] with as many shuffle partitions (the
+    # get_spark defaults), so $SPARK_GRAFT_CPUS reaches the tests too
     spark = get_spark(
         app_name="etl-showcase-tests",
-        master=f"local[{cpus}]",
-        shuffle_partitions=8,
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "6g"},
     )
     yield spark
