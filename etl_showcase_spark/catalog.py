@@ -232,14 +232,3 @@ def table(
                     df = df.repartition(n_part)
     return df
 
-
-def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several tables at once; defaults to all of them."""
-    use = names or TABLES
-    return {n: table(spark, sf_dir, n) for n in use}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register temp views so spark.sql() queries mirror the oracle SQL."""
-    for n, df in load(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)

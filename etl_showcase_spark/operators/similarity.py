@@ -2,12 +2,19 @@
 cosine top-k baseline + hyperplane-LSH bucketed ANN for the scale path.
 
 Numeric determinism: similarity ranking uses *integer-quantized*
-arithmetic (floor(x*1000 + 0.5) per component). Integer dot products
-and norms are exact in both Spark and the DuckDB oracle regardless of
-summation order, so top-k results are bit-reproducible — the float
-epsilon games that plague cross-engine cosine comparisons disappear.
-Quantization error at scale 1000 is ~1e-3 relative, irrelevant for
-near-duplicate detection and ANN retrieval.
+arithmetic (floor(x·QUANT_SCALE + 0.5) per component). Integer dot
+products and norms are exact in both Spark and the DuckDB oracle
+regardless of summation order, so top-k results are bit-reproducible —
+the float epsilon games that plague cross-engine cosine comparisons
+disappear. Quantization error at scale 1000 is ~1e-3 relative,
+irrelevant for near-duplicate detection and ANN retrieval.
+
+That decision lives here once per spelling: ``quantize``/``int_norm``/
+``cosine_from_norms`` (Spark Column), ``_vector_kernels`` (numpy, for
+the Arrow batch paths) and ``SQL_QUANT`` (DuckDB, for the oracles).
+Zero-norm rule: the cosine of a zero vector is NULL, as DuckDB's
+division gives — it never passes a threshold and ranks last under
+DESC, in every spelling.
 """
 
 from __future__ import annotations
@@ -20,6 +27,12 @@ from ..caching import tracked_persist
 from .relational import topk_per_group
 
 QUANT_SCALE = 1000
+
+# quantize(), DuckDB spelling, over an `embedding` list column
+SQL_QUANT = (
+    "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * "
+    f"{QUANT_SCALE} + 0.5) AS BIGINT))"
+)
 
 
 def quantize(vec: Column, scale: int = QUANT_SCALE) -> Column:
@@ -39,12 +52,80 @@ def int_dot(a: Column, b: Column) -> Column:
     )
 
 
+def int_norm(vec_q: Column) -> Column:
+    """√dot(v, v) of a quantized vector, as double."""
+    return F.sqrt(int_dot(vec_q, vec_q).cast("double"))
+
+
+def cosine_from_norms(dot: Column, na: Column, nb: Column) -> Column:
+    """dot → double / (na·nb): the only float ops are the cast and the
+    divide, computed identically in any engine. try_divide makes a zero
+    norm give NULL (DuckDB's answer) where ANSI `/` raises
+    DIVIDE_BY_ZERO."""
+    return F.try_divide(dot.cast("double"), na * nb)
+
+
 def quantized_cosine(a_q: Column, b_q: Column) -> Column:
-    """Cosine from exact integer dot/norms; the only float ops are the
-    final sqrt/divide, computed identically in any engine."""
-    return int_dot(a_q, b_q).cast("double") / (
-        F.sqrt(int_dot(a_q, a_q).cast("double"))
-        * F.sqrt(int_dot(b_q, b_q).cast("double"))
+    """Cosine of two quantized vectors from exact integer dot/norms."""
+    return cosine_from_norms(int_dot(a_q, b_q), int_norm(a_q), int_norm(b_q))
+
+
+def _vector_kernels(n_planes: int = 0, dim: int = 0, n_tables: int = 0):
+    """The quantized-cosine decision, numpy spelling, for the Arrow batch
+    paths. Every kernel is a nested closure, so cloudpickle ships it BY
+    VALUE: executor workers may run from a cwd where this package is not
+    importable (see sources/io.py:_make_fake_fetch), so no kernel may
+    reference a module-level name of it.
+
+    - ``quant(vecs)`` → (int64 matrix, float64 norms): quantize()'s
+      floor(x·QUANT_SCALE + 0.5) per component, norm = √dot(v, v);
+    - ``cosine(dots, na, nb)`` → dot / (na·nb); a zero norm gives NaN,
+      which Arrow ships to Spark as NULL (cosine_from_norms' rule);
+    - ``cut(scores, valid, keep)`` → bool mask over a (rows, queries)
+      score matrix: per query, every valid score tied with or above the
+      keep-th best valid one, NaN ranked last. Per-batch pruning under
+      which a later (cosine desc, id asc) top-keep stays exact across
+      batches and partition layouts;
+    - ``plane_keys(int_mat)`` → (rows, n_tables) hyperplane bucket keys,
+      lsh_bucket_key's buckets for tables 0..n_tables-1.
+    """
+    import types
+
+    import numpy as np
+
+    scale = QUANT_SCALE
+    total = n_planes * n_tables
+    planes = np.array(
+        [_plane_signs(p, dim) for p in range(total)], dtype="int64"
+    ).reshape(total, dim).T  # (dim, total)
+    weights = np.array(
+        [1 << (n_planes - 1 - p) for p in range(n_planes)], dtype="int64"
+    )
+
+    def quant(vecs):
+        q = np.floor(
+            np.stack(vecs.to_numpy()).astype("float64") * scale + 0.5
+        ).astype("int64")
+        return q, np.sqrt((q * q).sum(axis=1).astype("float64"))
+
+    def cosine(dots, na, nb):
+        with np.errstate(invalid="ignore"):  # 0/0 → NaN is the rule
+            return dots.astype("float64") / (na * nb)
+
+    def cut(scores, valid, keep):
+        n = len(scores)
+        if n <= keep:
+            return valid
+        score = np.where(valid & ~np.isnan(scores), scores, -np.inf)
+        thr = np.partition(score, n - keep, axis=0)[n - keep]  # per query
+        return valid & (score >= thr)
+
+    def plane_keys(q):
+        bits = (q @ planes) > 0  # (rows, total), table-major plane order
+        return bits.reshape(len(q), n_tables, n_planes) @ weights
+
+    return types.SimpleNamespace(
+        quant=quant, cosine=cosine, cut=cut, plane_keys=plane_keys
     )
 
 
@@ -63,10 +144,10 @@ def brute_force_topk(
     lsh_ann_topk when the query set is large."""
     q = queries.select(
         F.col(query_id).alias("q_id"), quantize(F.col(vec_col)).alias("q_vec")
-    ).withColumn("q_nrm", F.sqrt(int_dot(F.col("q_vec"), F.col("q_vec")).cast("double")))
+    ).withColumn("q_nrm", int_norm(F.col("q_vec")))
     c = corpus.select(
         F.col(corpus_id).alias("c_id"), quantize(F.col(vec_col)).alias("c_vec")
-    ).withColumn("c_nrm", F.sqrt(int_dot(F.col("c_vec"), F.col("c_vec")).cast("double")))
+    ).withColumn("c_nrm", int_norm(F.col("c_vec")))
     # norms computed once per row (not per pair); the per-pair work is a
     # single integer dot product
     scored = (
@@ -75,9 +156,8 @@ def brute_force_topk(
         .select(
             "q_id",
             "c_id",
-            (
-                int_dot(F.col("q_vec"), F.col("c_vec")).cast("double")
-                / (F.col("q_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("q_vec"), F.col("c_vec")), F.col("q_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
     )
@@ -148,27 +228,15 @@ def lsh_bucket_keys_gemm(
     and each Arrow batch costs one matmul."""
     from pyspark.sql.pandas.functions import pandas_udf
 
-    total = n_planes * n_tables
-    planes = [_plane_signs(p, dim) for p in range(total)]
+    kern = _vector_kernels(n_planes, dim, n_tables)
 
     @pandas_udf("array<long>")
     def keys(vecs):  # pd.Series of list<float>
-        import numpy as np
         import pandas as pd
 
         if not len(vecs):  # zero-row Arrow batch: np.stack would raise
             return pd.Series([], dtype="object")
-        S = np.array(planes, dtype="int64").T  # (dim, total)
-        m = np.stack(vecs.to_numpy())
-        q = np.floor(m.astype("float64") * 1000 + 0.5).astype("int64")
-        bits = (q @ S) > 0  # (rows, total)
-        weights = np.array(
-            [1 << (n_planes - 1 - p) for p in range(n_planes)], dtype="int64"
-        )
-        out = np.zeros((len(m), n_tables), dtype="int64")
-        for t in range(n_tables):
-            out[:, t] = bits[:, t * n_planes : (t + 1) * n_planes] @ weights
-        return pd.Series(list(out))
+        return pd.Series(list(kern.plane_keys(kern.quant(vecs)[0])))
 
     return keys(F.col(vec_col))
 
@@ -185,114 +253,23 @@ def lsh_ann_topk(
     n_tables: int = 8,
 ) -> DataFrame:
     """Approximate top-k: bucket both sides by hyperplane signatures in
-    n_tables independent hash tables (OR-amplification), join within
-    (table, bucket), dedup candidates, rank within query. Shuffles on
-    the bucket key — the corpus never cross-joins; this is the 100 TB
-    path. Recall ≈ 1-(1-p^n_planes)^n_tables, tunable per workload.
+    n_tables independent hash tables (OR-amplification) and rank, per
+    query, only the corpus rows sharing a (table, bucket) key with it.
+    Recall ≈ 1-(1-p^n_planes)^n_tables, tunable per workload.
 
-    Asymmetric sides, by design: the QUERY side is bounded (O(1) in
-    corpus size), so its postings AND its quantized vectors are
-    collected once and shipped to executors in ONE broadcast (the same
-    driver-metadata envelope as gemm_exact_topk's query matrix); the
-    CORPUS — the side that grows with data — streams through a single
-    mapInPandas pass that signs each Arrow batch with the plane GEMM,
-    matches the batch's (table, bucket) keys against the query postings
-    with vectorized merges, dedups candidate pairs in-batch (each
-    corpus row lives in exactly one batch, so in-batch dedup IS global
-    dedup), and emits the exact quantized cosine for the matches. One
-    Python stage, zero corpus-side joins, zero corpus-vector shuffles;
-    the only exchange after the scan is the per-query top-k.
-
-    Optimization round 13 rewrite of the round-10 shape (posting
-    explode → broadcast posting join → dropDuplicates exchange → two
-    scoring joins): that plan shuffled the candidate set twice,
-    re-joined corpus vectors by id, and scored each pair with the
-    INTERPRETED zip_with/aggregate int_dot (~2 lambda evals per vector
-    component — measured 345 ms single-task at sf0.1 where the numpy
-    gather-dot below is ~1 ms). Candidates, cosines and ranking are
-    bit-identical: same ±1 planes (_plane_signs), same exact int64
-    dots, same IEEE double sequence (dot→double / (q_nrm·c_nrm);
-    IEEE multiply is commutative), so the DuckDB oracle that replays
-    postings+scoring in SQL stays hash-green across the rewrite.
-    Round 10's lesson (JVM expression signatures 2.6× slower than the
-    Arrow GEMM, see tests/test_round10_session_ops.py::
-    test_lsh_expression_keys_equal_gemm_keys) still holds and is why
-    BOTH sides sign with the GEMM here."""
-    import numpy as np
-    import pandas as pd
-
-    spark = queries.sparkSession
-    qpd = queries.select(
-        F.col(query_id).alias("q_id"), F.col(vec_col).alias("v")
-    ).toPandas()
-    if not len(qpd):
-        return spark.createDataFrame([], "q_id long, c_id long, cosine double, rnk int")
-    total = n_planes * n_tables
-    S = np.array([_plane_signs(p, dim) for p in range(total)], dtype="int64").T
-    weights = np.array(
-        [1 << (n_planes - 1 - p) for p in range(n_planes)], dtype="int64"
-    )
-
-    def _keys(int_mat):
-        # identical math to lsh_bucket_keys_gemm: one GEMM against the
-        # ±1 plane matrix, sign, per-table bit-pack → (rows, n_tables)
-        bits = (int_mat @ S) > 0
-        out = np.zeros((int_mat.shape[0], n_tables), dtype="int64")
-        for t in range(n_tables):
-            out[:, t] = bits[:, t * n_planes : (t + 1) * n_planes] @ weights
-        return out
-
-    q_ids = qpd["q_id"].to_numpy()
-    q_int = np.floor(
-        np.stack(qpd["v"].to_numpy()).astype("float64") * 1000 + 0.5
-    ).astype("int64")
-    q_nrm = np.sqrt((q_int * q_int).sum(axis=1).astype("float64"))
-    q_keys = _keys(q_int)
-    # per-table posting frames (bucket key → query index): O(|queries|)
-    postings = [
-        pd.DataFrame({"key": q_keys[:, t], "qi": np.arange(len(q_ids))})
-        for t in range(n_tables)
-    ]
-    bq = spark.sparkContext.broadcast((q_ids, q_int, q_nrm, postings))
-    nt, npl = n_tables, n_planes
-
-    def match_batches(batches):
-        ids, Q, qn, posts = bq.value
-        for pdf in batches:
-            if not len(pdf):  # zero-row Arrow batch: np.stack would raise
-                continue
-            c_ids = pdf["c_id"].to_numpy()
-            C = np.floor(
-                np.stack(pdf["v"].to_numpy()).astype("float64") * 1000 + 0.5
-            ).astype("int64")
-            cn = np.sqrt((C * C).sum(axis=1).astype("float64"))
-            bits = (C @ S) > 0
-            parts = []
-            for t in range(nt):
-                kt = bits[:, t * npl : (t + 1) * npl] @ weights
-                m = pd.DataFrame({"key": kt, "ci": np.arange(len(c_ids))})
-                parts.append(m.merge(posts[t], on="key")[["ci", "qi"]])
-            cand = pd.concat(parts, ignore_index=True).drop_duplicates()
-            ci = cand["ci"].to_numpy()
-            qi = cand["qi"].to_numpy()
-            keep = ids[qi] != c_ids[ci]
-            ci, qi = ci[keep], qi[keep]
-            if not len(ci):
-                continue
-            dots = (C[ci] * Q[qi]).sum(axis=1)  # exact int64
-            yield pd.DataFrame(
-                {
-                    "q_id": ids[qi],
-                    "c_id": c_ids[ci],
-                    "cosine": dots.astype("float64") / (qn[qi] * cn[ci]),
-                }
-            )
-
-    scored = corpus.select(
-        F.col(corpus_id).alias("c_id"), F.col(vec_col).alias("v")
-    ).mapInPandas(match_batches, "q_id long, c_id long, cosine double")
-    return topk_per_group(
-        scored, ["q_id"], [F.col("cosine").desc(), F.col("c_id").asc()], k, rank_col="rnk"
+    The panel's keys ride the broadcast of _broadcast_panel_topk; each
+    corpus Arrow batch is signed with the plane GEMM (the planes of
+    lsh_bucket_keys_gemm) and matched against them in one vectorized
+    compare. No corpus-side join, no corpus-vector shuffle; the only
+    exchange after the scan is the per-query top-k. The DuckDB oracle
+    replays postings and scoring in SQL bit-for-bit. Round 10's lesson
+    (JVM expression signatures 2.6× slower than the Arrow GEMM, see
+    tests/test_round10_session_ops.py::
+    test_lsh_expression_keys_equal_gemm_keys) is why BOTH sides sign
+    with the GEMM here."""
+    return _broadcast_panel_topk(
+        queries, corpus, query_id, corpus_id, vec_col, k,
+        lsh=(n_planes, dim, n_tables),
     )
 
 
@@ -394,7 +371,7 @@ def ivf_ann_topk(
     """
     cv = corpus.select(
         F.col(corpus_id).alias("c_id"), quantize(F.col(vec_col)).alias("c_vec")
-    ).withColumn("c_nrm", F.sqrt(int_dot(F.col("c_vec"), F.col("c_vec")).cast("double")))
+    ).withColumn("c_nrm", int_norm(F.col("c_vec")))
     cents = build_ivf_centroids(cv, n_centroids)
     # an empty corpus has no index to build and trivially no neighbors
     if not cents:
@@ -410,9 +387,7 @@ def ivf_ann_topk(
         queries.select(
             F.col(query_id).alias("q_id"), quantize(F.col(vec_col)).alias("q_vec")
         )
-        .withColumn(
-            "q_nrm", F.sqrt(int_dot(F.col("q_vec"), F.col("q_vec")).cast("double"))
-        )
+        .withColumn("q_nrm", int_norm(F.col("q_vec")))
         .withColumn("cell", F.explode(probe(F.col("q_vec"))))
     )
     scored = (
@@ -421,14 +396,100 @@ def ivf_ann_topk(
         .select(
             "q_id",
             "c_id",
-            (
-                int_dot(F.col("q_vec"), F.col("c_vec")).cast("double")
-                / (F.col("q_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("q_vec"), F.col("c_vec")), F.col("q_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
     )
     return topk_per_group(
         scored, ["q_id"], [F.col("cosine").desc(), F.col("c_id").asc()], k, rank_col="rnk"
+    )
+
+
+def _broadcast_panel_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    k: int,
+    label_col: str | None = None,
+    lsh: tuple[int, int, int] | None = None,
+) -> DataFrame:
+    """The one skeleton behind gemm_exact_topk, gemm_contrastive_topk
+    and lsh_ann_topk. The query panel is bounded (O(1) in corpus size,
+    the same metadata budget as IVF's seeds), so it is collected once,
+    quantized once and broadcast; the corpus streams
+    through ONE mapInPandas pass in which each Arrow batch is quantized
+    and scored against the whole panel by ONE int64 matmul; a per-group
+    top-k then ranks by (cosine desc, c_id asc), NULL (zero-norm)
+    cosines last.
+
+    Per batch, ``cut`` keeps every candidate tied with or above the
+    k-th best of its group, so the global ranking is exact across ties,
+    batches and partition layouts. A group is a query, or with
+    ``label_col`` a (query, side): 'pos' = same label, 'neg' =
+    different label. Every corpus row but the query itself is a
+    candidate, or with ``lsh`` = (n_planes, dim, n_tables) only those
+    sharing a (table, bucket) key with the query. Dots are exact int64
+    and the cosine is dot→double / (norm·norm), the IEEE op sequence of
+    quantized_cosine and the DuckDB twins."""
+    import numpy as np
+    import pandas as pd
+
+    spark = queries.sparkSession
+    if label_col is None:
+        group, schema = ["q_id"], "q_id long, c_id long, cosine double"
+        extra = []
+    else:
+        group = ["q_id", "side"]
+        schema = "q_id long, side string, c_id long, cosine double"
+        extra = [F.col(label_col).alias("l")]
+    names = [c.split()[0] for c in schema.split(", ")]
+    qpd = queries.select(
+        F.col(query_id).alias("q_id"), F.col(vec_col).alias("v"), *extra
+    ).toPandas()
+    if not len(qpd):
+        return spark.createDataFrame([], schema + ", rnk int")
+    kern = _vector_kernels(*(lsh or ()))
+    q_int, q_nrm = kern.quant(qpd["v"])
+    bq = spark.sparkContext.broadcast(
+        (
+            qpd["q_id"].to_numpy(),
+            q_int,
+            q_nrm,
+            qpd["l"].to_numpy() if label_col else None,
+            kern.plane_keys(q_int) if lsh else None,
+        )
+    )
+
+    def score_batches(batches):
+        ids, Q, qn, labs, q_keys = bq.value
+        for pdf in batches:
+            if not len(pdf):  # zero-row Arrow batch: np.stack would raise
+                continue
+            c_ids = pdf["c_id"].to_numpy()
+            C, cn = kern.quant(pdf["v"])
+            sims = kern.cosine(C @ Q.T, cn[:, None], qn[None, :])
+            cand = c_ids[:, None] != ids[None, :]
+            if q_keys is not None:
+                cand &= (kern.plane_keys(C)[:, None, :] == q_keys[None, :, :]).any(axis=2)
+            sides = [(None, cand)]
+            if labs is not None:
+                same = pdf["l"].to_numpy()[:, None] == labs[None, :]
+                sides = [("pos", cand & same), ("neg", cand & ~same)]
+            for side, valid in sides:
+                ci, qj = np.nonzero(kern.cut(sims, valid, k))
+                yield pd.DataFrame(
+                    {"q_id": ids[qj], "side": side, "c_id": c_ids[ci], "cosine": sims[ci, qj]},
+                    columns=names,
+                )
+
+    scored = corpus.select(
+        F.col(corpus_id).alias("c_id"), F.col(vec_col).alias("v"), *extra
+    ).mapInPandas(score_batches, schema)
+    return topk_per_group(
+        scored, group, [F.col("cosine").desc(), F.col("c_id").asc()], k, rank_col="rnk"
     )
 
 
@@ -441,126 +502,10 @@ def gemm_exact_topk(
     k: int,
 ) -> DataFrame:
     """Exact quantized-cosine top-k via Arrow GEMM — brute_force_topk's
-    result, the GEMM way: the bounded query set is collected once
-    (O(1) in corpus size, same driver-metadata budget as IVF's seeds),
-    quantized to int64 and broadcast; each corpus Arrow batch does ONE
-    integer matmul and emits only its local candidates; a final
-    per-query top-k reduces across batches.
-
-    Oracle-grade exactness: dots are int64 (exact), cosine is
-    dot→double / (sqrt·sqrt) — the identical IEEE op sequence as
-    quantized_cosine and the DuckDB twin. Per-batch pruning keeps
-    every row TIED with the (k+1)-th score, so the global
-    (cosine desc, id asc) ranking is exact even across ties — the
-    boundary a plain argpartition cut would get wrong."""
-    import numpy as np
-    import pandas as pd
-
-    spark = queries.sparkSession
-    qpd = queries.select(
-        F.col(query_id).alias("q_id"), F.col(vec_col).alias("v")
-    ).toPandas()
-    if not len(qpd):
-        return spark.createDataFrame([], "q_id long, c_id long, cosine double, rnk int")
-    q_ids = qpd["q_id"].to_numpy()
-    q_int = np.floor(np.stack(qpd["v"].to_numpy()).astype("float64") * 1000 + 0.5).astype(
-        "int64"
-    )
-    q_nrm = np.sqrt((q_int * q_int).sum(axis=1).astype("float64"))
-    bq = spark.sparkContext.broadcast((q_ids, q_int, q_nrm))
-    keep = k + 1  # self-matches are filtered after scoring
-
-    def score_batches(batches):
-        ids, Q, qn = bq.value
-        for pdf in batches:
-            if not len(pdf):  # zero-row Arrow batch: np.stack would raise
-                continue
-            c_ids = pdf["c_id"].to_numpy()
-            c_int = np.floor(
-                np.stack(pdf["v"].to_numpy()).astype("float64") * 1000 + 0.5
-            ).astype("int64")
-            c_nrm = np.sqrt((c_int * c_int).sum(axis=1).astype("float64"))
-            sims = (c_int @ Q.T).astype("float64") / (c_nrm[:, None] * qn[None, :])
-            for j in range(sims.shape[1]):
-                col = sims[:, j]
-                if len(col) > keep:
-                    thr = np.partition(col, len(col) - keep)[len(col) - keep]
-                    idx = np.flatnonzero(col >= thr)
-                else:
-                    idx = np.arange(len(col))
-                yield pd.DataFrame(
-                    {"q_id": ids[j], "c_id": c_ids[idx], "cosine": col[idx]}
-                )
-
-    scored = corpus.select(
-        F.col(corpus_id).alias("c_id"), F.col(vec_col).alias("v")
-    ).mapInPandas(score_batches, "q_id long, c_id long, cosine double")
-    pruned = scored.filter(F.col("q_id") != F.col("c_id"))
-    return topk_per_group(
-        pruned, ["q_id"], [F.col("cosine").desc(), F.col("c_id").asc()], k, rank_col="rnk"
-    )
-
-
-def knn_topk_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Vectorized cosine top-k via Arrow + numpy matmul (mapInPandas).
-
-    The 100 TB-fast brute-force path: the (bounded) query matrix is
-    broadcast to executors once; each corpus partition streams through
-    as Arrow batches and does one (batch × dim) @ (dim × nq) GEMM; each
-    batch emits only its local top-k per query, and a final per-query
-    top-k reduces across partitions. Python cost is O(1) calls per
-    batch — no per-row interpretation.
-
-    Use when exact ranking is wanted and |queries| fits in memory
-    (~1e5 × dim floats); otherwise lsh_ann_topk.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = queries.sparkSession
-    qpd = queries.select(
-        F.col(query_id).alias("q_id"), F.col(vec_col).alias("v")
-    ).toPandas()
-    q_ids = qpd["q_id"].to_numpy()
-    qm = np.stack(qpd["v"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    bq = spark.sparkContext.broadcast((q_ids, qm))
-
-    def score_batches(batches):
-        ids, mat = bq.value
-        for pdf in batches:
-            if not len(pdf):  # zero-row Arrow batch: np.stack would raise
-                continue
-            c_ids = pdf["c_id"].to_numpy()
-            cm = np.stack(pdf["v"].to_numpy()).astype("float64")
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = cm @ mat.T  # (batch, nq)
-            top = min(k + 1, len(c_ids))
-            for j in range(sims.shape[1]):
-                col = sims[:, j]
-                idx = np.argpartition(-col, top - 1)[:top]
-                yield pd.DataFrame(
-                    {
-                        "q_id": ids[j],
-                        "c_id": c_ids[idx],
-                        "cosine": col[idx],
-                    }
-                )
-
-    scored = corpus.select(
-        F.col(corpus_id).alias("c_id"), F.col(vec_col).alias("v")
-    ).mapInPandas(score_batches, "q_id long, c_id long, cosine double")
-    pruned = scored.filter(F.col("q_id") != F.col("c_id"))
-    return topk_per_group(
-        pruned, ["q_id"], [F.col("cosine").desc(), F.col("c_id").asc()], k, rank_col="rnk"
-    )
+    result, the GEMM way (_broadcast_panel_topk): one integer matmul
+    per corpus Arrow batch against the broadcast query panel, tie-safe
+    per-batch pruning, one per-query top-k across batches."""
+    return _broadcast_panel_topk(queries, corpus, query_id, corpus_id, vec_col, k)
 
 
 def lsh_neardup_pairs(
@@ -604,9 +549,7 @@ def lsh_neardup_pairs(
     # GEMM bucket pass and the quantize+norm pass once instead of twice
     v = df.select(
         F.col(id_col).alias("__id"), quantize(F.col(vec_col)).alias("__vec")
-    ).withColumn(
-        "__nrm", F.sqrt(int_dot(F.col("__vec"), F.col("__vec")).cast("double"))
-    ).transform(tracked_persist)
+    ).withColumn("__nrm", int_norm(F.col("__vec"))).transform(tracked_persist)
     posting = df.select(
         F.col(id_col).alias("__id"),
         F.posexplode(lsh_bucket_keys_gemm(vec_col, n_planes, dim, n_tables)).alias(
@@ -657,9 +600,8 @@ def lsh_neardup_pairs(
         .select(
             "id_a",
             "id_b",
-            (
-                int_dot(F.col("__va"), F.col("__vb")).cast("double")
-                / (F.col("__na") * F.col("__nb"))
+            cosine_from_norms(
+                int_dot(F.col("__va"), F.col("__vb")), F.col("__na"), F.col("__nb")
             ).alias("cosine"),
         )
     )
@@ -679,10 +621,10 @@ def neardup_pairs_by_cosine(
     one integer dot product per pair."""
     v = df.select(
         F.col(id_col).alias("__id"), quantize(F.col(vec_col)).alias("__vec")
-    ).withColumn("__nrm", F.sqrt(int_dot(F.col("__vec"), F.col("__vec")).cast("double")))
+    ).withColumn("__nrm", int_norm(F.col("__vec")))
     a, b = v.alias("a"), v.alias("b")
-    cos = int_dot(F.col("a.__vec"), F.col("b.__vec")).cast("double") / (
-        F.col("a.__nrm") * F.col("b.__nrm")
+    cos = cosine_from_norms(
+        int_dot(F.col("a.__vec"), F.col("b.__vec")), F.col("a.__nrm"), F.col("b.__nrm")
     )
     return (
         a.join(b, F.col("a.__id") < F.col("b.__id"))
@@ -805,81 +747,10 @@ def gemm_contrastive_topk(
     positives a contrastive loss pulls together) and the top-k
     DIFFERENT-label neighbours ('neg' — the hard negatives it pushes
     apart, the rows a random negative sampler would never surface).
-
-    Same scale shape as gemm_exact_topk: the bounded query panel is
-    collected once with its labels (O(1) in corpus size), quantized to
-    int64 and broadcast; each corpus Arrow batch does ONE integer
-    matmul; per-batch pruning keeps the (k+1) best PER SIDE per query
-    (ties with the boundary score included), so the global
-    (cosine desc, id asc) ranking per (query, side) is exact. The
-    corpus streams through once at any scale factor.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = queries.sparkSession
-    qpd = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.col(vec_col).alias("v"),
-        F.col(label_col).alias("l"),
-    ).toPandas()
-    if not len(qpd):
-        return spark.createDataFrame(
-            [], "q_id long, side string, c_id long, cosine double, rnk int"
-        )
-    q_ids = qpd["q_id"].to_numpy()
-    q_lab = qpd["l"].to_numpy()
-    q_int = np.floor(
-        np.stack(qpd["v"].to_numpy()).astype("float64") * 1000 + 0.5
-    ).astype("int64")
-    q_nrm = np.sqrt((q_int * q_int).sum(axis=1).astype("float64"))
-    bq = spark.sparkContext.broadcast((q_ids, q_lab, q_int, q_nrm))
-    keep = k + 1  # self-matches are filtered after scoring
-
-    def score_batches(batches):
-        ids, labs, Q, qn = bq.value
-        for pdf in batches:
-            if not len(pdf):  # zero-row Arrow batch: np.stack would raise
-                continue
-            c_ids = pdf["c_id"].to_numpy()
-            c_lab = pdf["l"].to_numpy()
-            c_int = np.floor(
-                np.stack(pdf["v"].to_numpy()).astype("float64") * 1000 + 0.5
-            ).astype("int64")
-            c_nrm = np.sqrt((c_int * c_int).sum(axis=1).astype("float64"))
-            sims = (c_int @ Q.T).astype("float64") / (c_nrm[:, None] * qn[None, :])
-            for j in range(sims.shape[1]):
-                col = sims[:, j]
-                same = c_lab == labs[j]
-                for side, mask in (("pos", same), ("neg", ~same)):
-                    idx = np.flatnonzero(mask)
-                    if not len(idx):
-                        continue
-                    vals = col[idx]
-                    if len(vals) > keep:
-                        thr = np.partition(vals, len(vals) - keep)[len(vals) - keep]
-                        idx = idx[vals >= thr]
-                    yield pd.DataFrame(
-                        {
-                            "q_id": ids[j],
-                            "side": side,
-                            "c_id": c_ids[idx],
-                            "cosine": col[idx],
-                        }
-                    )
-
-    scored = corpus.select(
-        F.col(corpus_id).alias("c_id"),
-        F.col(vec_col).alias("v"),
-        F.col(label_col).alias("l"),
-    ).mapInPandas(score_batches, "q_id long, side string, c_id long, cosine double")
-    pruned = scored.filter(F.col("q_id") != F.col("c_id"))
-    return topk_per_group(
-        pruned,
-        ["q_id", "side"],
-        [F.col("cosine").desc(), F.col("c_id").asc()],
-        k,
-        rank_col="rnk",
+    It is gemm_exact_topk grouped by (query, side): the corpus streams
+    through once at any scale factor."""
+    return _broadcast_panel_topk(
+        queries, corpus, query_id, corpus_id, vec_col, k, label_col=label_col
     )
 
 
@@ -907,7 +778,7 @@ def ivf_contrastive_negatives(
         F.col(corpus_id).alias("c_id"),
         quantize(F.col(vec_col)).alias("c_vec"),
         F.col(label_col).alias("c_lab"),
-    ).withColumn("c_nrm", F.sqrt(int_dot(F.col("c_vec"), F.col("c_vec")).cast("double")))
+    ).withColumn("c_nrm", int_norm(F.col("c_vec")))
     cents = build_ivf_centroids(cv, n_centroids)
     if not cents:
         return queries.sparkSession.createDataFrame(
@@ -923,9 +794,7 @@ def ivf_contrastive_negatives(
             quantize(F.col(vec_col)).alias("q_vec"),
             F.col(label_col).alias("q_lab"),
         )
-        .withColumn(
-            "q_nrm", F.sqrt(int_dot(F.col("q_vec"), F.col("q_vec")).cast("double"))
-        )
+        .withColumn("q_nrm", int_norm(F.col("q_vec")))
         .withColumn("cell", F.explode(probe(F.col("q_vec"))))
     )
     scored = (
@@ -937,9 +806,8 @@ def ivf_contrastive_negatives(
         .select(
             "q_id",
             "c_id",
-            (
-                int_dot(F.col("q_vec"), F.col("c_vec")).cast("double")
-                / (F.col("q_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("q_vec"), F.col("c_vec")), F.col("q_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
     )

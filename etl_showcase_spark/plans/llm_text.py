@@ -1275,6 +1275,7 @@ def _chunk_gemm_topk(spark: SparkSession, dense: DataFrame, qpd, k: int) -> Data
     import pandas as pd
 
     from ..operators.relational import topk_per_group
+    from ..operators.similarity import _vector_kernels
 
     if not len(qpd):
         return spark.createDataFrame([], _CNB_EMPTY_SCHEMA)
@@ -1283,6 +1284,7 @@ def _chunk_gemm_topk(spark: SparkSession, dense: DataFrame, qpd, k: int) -> Data
     Q = np.stack(qpd["v"].to_numpy()).astype("int64")
     q_nrm = np.sqrt((Q * Q).sum(axis=1).astype("float64"))
     bq = spark.sparkContext.broadcast((q_doc, q_idx, Q, q_nrm))
+    kern = _vector_kernels()
 
     def score_batches(batches):
         qd, qi, Qm, qn = bq.value
@@ -1294,28 +1296,19 @@ def _chunk_gemm_topk(spark: SparkSession, dense: DataFrame, qpd, k: int) -> Data
             C = np.stack(pdf["v"].to_numpy()).astype("int64")
             c_nrm = np.sqrt((C * C).sum(axis=1).astype("float64"))
             D = C @ Qm.T  # exact int64 dots
-            cos = D.astype("float64") / (c_nrm[:, None] * qn[None, :])
-            for j in range(cos.shape[1]):
-                mask = c_doc != qd[j]  # the RETRO same-document exclusion
-                col = np.where(mask, cos[:, j], -np.inf)
-                n_m = int(mask.sum())
-                if n_m > k:
-                    thr = np.partition(col, len(col) - k)[len(col) - k]
-                    keep = np.flatnonzero(mask & (col >= thr))
-                else:
-                    keep = np.flatnonzero(mask)
-                if not len(keep):
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "q_doc_id": qd[j],
-                        "q_chunk_idx": qi[j],
-                        "c_doc_id": c_doc[keep],
-                        "c_chunk_idx": c_idx[keep],
-                        "dot": D[keep, j],
-                        "cosine": cos[keep, j],
-                    }
-                )
+            cos = kern.cosine(D, c_nrm[:, None], qn[None, :])
+            # the RETRO same-document exclusion
+            ci, qj = np.nonzero(kern.cut(cos, c_doc[:, None] != qd[None, :], k))
+            yield pd.DataFrame(
+                {
+                    "q_doc_id": qd[qj],
+                    "q_chunk_idx": qi[qj],
+                    "c_doc_id": c_doc[ci],
+                    "c_chunk_idx": c_idx[ci],
+                    "dot": D[ci, qj],
+                    "cosine": cos[ci, qj],
+                }
+            )
 
     scored = dense.mapInPandas(
         score_batches,

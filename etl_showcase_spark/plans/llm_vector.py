@@ -17,19 +17,18 @@ from ..caching import tracked_persist
 
 from ..catalog import FANOUT_CHUNKS, derived_width, table
 from ..operators.similarity import (
+    SQL_QUANT,
     _plane_signs,
-    brute_force_topk,
+    cosine_from_norms,
     int_dot,
+    int_norm,
     lsh_ann_topk,
     lsh_neardup_pairs,
     neardup_pairs_by_cosine,
     quantize,
+    quantized_cosine,
 )
 from ..registry import register
-
-_SQL_QUANT = (
-    "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-)
 
 # ---------------------------------------------------------------------------
 # L3: exact cosine top-k. The query set is stride-capped at ~100 queries
@@ -43,11 +42,11 @@ WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
 q AS (
-  SELECT vec_id AS q_id, {_SQL_QUANT} AS qv
+  SELECT vec_id AS q_id, {SQL_QUANT} AS qv
   FROM embeddings, s WHERE vec_id % s.stride = 0
 ),
 c AS (
-  SELECT vec_id AS c_id, {_SQL_QUANT} AS cv FROM embeddings
+  SELECT vec_id AS c_id, {SQL_QUANT} AS cv FROM embeddings
 ),
 scored AS (
   SELECT q_id, c_id,
@@ -162,7 +161,7 @@ def _neardup_lsh_oracle() -> str:
     postings = _lsh_posting_sql(_ND_PLANES, _ND_DIM, _ND_TABLES)
     return f"""
 WITH v AS (
-  SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings
+  SELECT vec_id, {SQL_QUANT} AS qv FROM embeddings
 ),
 n AS (
   SELECT vec_id, qv, SQRT(CAST(list_dot_product(qv, qv) AS DOUBLE)) AS nrm FROM v
@@ -216,8 +215,8 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NEARDUP_ALLPAIRS_ORACLE = f"""
 WITH v AS (
-  SELECT vec_id, {_SQL_QUANT} AS qv,
-         SQRT(CAST(list_dot_product({_SQL_QUANT}, {_SQL_QUANT}) AS DOUBLE)) AS nrm
+  SELECT vec_id, {SQL_QUANT} AS qv,
+         SQRT(CAST(list_dot_product({SQL_QUANT}, {SQL_QUANT}) AS DOUBLE)) AS nrm
   FROM embeddings
 )
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -241,7 +240,7 @@ def embedding_neardup_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NORMS_ORACLE = f"""
 WITH v AS (
-  SELECT label, list_dot_product({_SQL_QUANT}, {_SQL_QUANT}) AS sqnorm
+  SELECT label, list_dot_product({SQL_QUANT}, {SQL_QUANT}) AS sqnorm
   FROM embeddings
 )
 SELECT label,
@@ -289,7 +288,7 @@ WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
 v AS (
-  SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings
+  SELECT vec_id, {SQL_QUANT} AS qv FROM embeddings
 ),
 n AS (
   SELECT vec_id, qv, SQRT(CAST(list_dot_product(qv, qv) AS DOUBLE)) AS nrm FROM v
@@ -402,7 +401,7 @@ def _mmr_oracle() -> str:
 WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
-v AS (SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings),
+v AS (SELECT vec_id, {SQL_QUANT} AS qv FROM embeddings),
 q AS (SELECT vec_id AS q_id, qv FROM v, s WHERE vec_id % s.stride = 0),
 rel AS (
   SELECT q.q_id, c.vec_id AS c_id,
@@ -578,7 +577,7 @@ def _ann_recall_oracle() -> str:
 WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
-v AS (SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings),
+v AS (SELECT vec_id, {SQL_QUANT} AS qv FROM embeddings),
 n AS (
   SELECT vec_id, qv, SQRT(CAST(list_dot_product(qv, qv) AS DOUBLE)) AS nrm FROM v
 ),
@@ -697,7 +696,7 @@ _CENTROID_ORACLE = f"""
 SELECT label,
        CAST(u.i - 1 AS INT) AS dim,
        CAST(SUM(q[u.i]) AS DOUBLE) / COUNT(*) AS mean_component
-FROM (SELECT label, {_SQL_QUANT} AS q FROM embeddings),
+FROM (SELECT label, {SQL_QUANT} AS q FROM embeddings),
      LATERAL (SELECT UNNEST(range(1, LEN(q) + 1)) AS i) u
 GROUP BY 1, 2
 ORDER BY label, dim
@@ -733,7 +732,7 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIM_STATS_ORACLE = f"""
 WITH comp AS (
   SELECT CAST(u.i - 1 AS INT) AS dim, q[u.i] AS x
-  FROM (SELECT {_SQL_QUANT} AS q FROM embeddings),
+  FROM (SELECT {SQL_QUANT} AS q FROM embeddings),
        LATERAL (SELECT UNNEST(range(1, LEN(q) + 1)) AS i) u
 ),
 med AS (SELECT dim, MEDIAN(x) AS med FROM comp GROUP BY dim),
@@ -809,7 +808,7 @@ def _jl_oracle() -> str:
         for j in range(_JL_OUT_DIM)
     )
     return f"""
-WITH q AS (SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings),
+WITH q AS (SELECT vec_id, {SQL_QUANT} AS qv FROM embeddings),
 proj(dim, r) AS (VALUES
   {rows}
 )
@@ -872,11 +871,11 @@ WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
 q AS (
-  SELECT vec_id AS q_id, {_SQL_QUANT} AS qv FROM embeddings, s
+  SELECT vec_id AS q_id, {SQL_QUANT} AS qv FROM embeddings, s
   WHERE vec_id % s.stride = 0
 ),
 qp AS (SELECT q_id, qv, [{proj_cols('qv')}] AS pq FROM q),
-c AS (SELECT vec_id AS c_id, {_SQL_QUANT} AS cv FROM embeddings),
+c AS (SELECT vec_id AS c_id, {SQL_QUANT} AS cv FROM embeddings),
 cp AS (SELECT c_id, cv, [{proj_cols('cv')}] AS pc FROM c),
 cand AS (
   SELECT q_id, c_id,
@@ -910,7 +909,6 @@ WHERE rnk <= {_JL_FINAL_K}
 def ann_jl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from ..operators.similarity import int_dot
     from ..operators.similarity import random_projection_gemm as random_projection
 
     e = table(spark, sf_dir, "embeddings")
@@ -932,10 +930,7 @@ def ann_jl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"), quantize(F.col("embedding")).alias("cv")
     ).transform(tracked_persist)
     cp = cc.select("c_id", random_projection(F.col("cv"), m).alias("pc"))
-    pcos = int_dot(F.col("pq"), F.col("pc")).cast("double") / (
-        F.sqrt(int_dot(F.col("pq"), F.col("pq")).cast("double"))
-        * F.sqrt(int_dot(F.col("pc"), F.col("pc")).cast("double"))
-    )
+    pcos = quantized_cosine(F.col("pq"), F.col("pc"))
     wc = Window.partitionBy("q_id").orderBy(F.desc("__pcos"), F.asc("c_id"))
     kept = (
         cp.crossJoin(F.broadcast(qp.select("q_id", "pq")))
@@ -946,10 +941,7 @@ def ann_jl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("crnk") <= _JL_CAND_K)
         .select("q_id", "c_id")
     )
-    exact = int_dot(F.col("qv"), F.col("cv")).cast("double") / (
-        F.sqrt(int_dot(F.col("qv"), F.col("qv")).cast("double"))
-        * F.sqrt(int_dot(F.col("cv"), F.col("cv")).cast("double"))
-    )
+    exact = quantized_cosine(F.col("qv"), F.col("cv"))
     wr = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         kept.join(F.broadcast(qq), "q_id")
@@ -1038,7 +1030,7 @@ WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
 base AS (
-  SELECT vec_id, {_SQL_QUANT} AS v, {_sql_i8_quant(_SQL_I8_SCALE)} AS v8
+  SELECT vec_id, {SQL_QUANT} AS v, {_sql_i8_quant(_SQL_I8_SCALE)} AS v8
   FROM embeddings
 ),
 q AS (
@@ -1106,10 +1098,7 @@ def ann_int8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("v8").alias("c8"),
     )
-    i8cos = int_dot(F.col("q8"), F.col("c8")).cast("double") / (
-        F.sqrt(int_dot(F.col("q8"), F.col("q8")).cast("double"))
-        * F.sqrt(int_dot(F.col("c8"), F.col("c8")).cast("double"))
-    )
+    i8cos = quantized_cosine(F.col("q8"), F.col("c8"))
     wc = Window.partitionBy("q_id").orderBy(F.desc("__i8cos"), F.asc("c_id"))
     kept = (
         cc.select("c_id", "c8")
@@ -1121,10 +1110,7 @@ def ann_int8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("crnk") <= _I8_CAND_K)
         .select("q_id", "c_id")
     )
-    exact = int_dot(F.col("qv"), F.col("cv")).cast("double") / (
-        F.sqrt(int_dot(F.col("qv"), F.col("qv")).cast("double"))
-        * F.sqrt(int_dot(F.col("cv"), F.col("cv")).cast("double"))
-    )
+    exact = quantized_cosine(F.col("qv"), F.col("cv"))
     wr = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         kept.join(F.broadcast(qq.select("q_id", "qv")), "q_id")
@@ -1152,7 +1138,7 @@ def ann_int8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRIMMED_ORACLE = f"""
 WITH s AS (
-  SELECT label, CAST(list_dot_product({_SQL_QUANT}, {_SQL_QUANT}) AS BIGINT) AS sqnorm
+  SELECT label, CAST(list_dot_product({SQL_QUANT}, {SQL_QUANT}) AS BIGINT) AS sqnorm
   FROM embeddings
 ),
 r AS (
@@ -1347,7 +1333,7 @@ WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
 v AS (
-  SELECT vec_id, {_SQL_QUANT} AS qv FROM embeddings
+  SELECT vec_id, {SQL_QUANT} AS qv FROM embeddings
 ),
 n AS (
   SELECT vec_id, qv, SQRT(CAST(list_dot_product(qv, qv) AS DOUBLE)) AS nrm FROM v
@@ -1449,7 +1435,7 @@ def _serve_lsh_topk(
     )
     n = e.select(
         "vec_id", quantize(F.col("embedding")).alias("v")
-    ).withColumn("nrm", F.sqrt(int_dot(F.col("v"), F.col("v")).cast("double")))
+    ).withColumn("nrm", int_norm(F.col("v")))
     scored = (
         cand.join(n.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"),
                            F.col("nrm").alias("c_nrm")), "c_id")
@@ -1464,9 +1450,8 @@ def _serve_lsh_topk(
         .select(
             "q_id",
             "c_id",
-            (
-                int_dot(F.col("qv"), F.col("cv")).cast("double")
-                / (F.col("q_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("qv"), F.col("cv")), F.col("q_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
     )
@@ -1541,11 +1526,11 @@ WITH s AS (
   SELECT GREATEST(50, CAST(COUNT(*) // 100 AS BIGINT)) AS stride FROM embeddings
 ),
 q AS (
-  SELECT vec_id AS q_id, {_SQL_QUANT} AS qv, label AS ql
+  SELECT vec_id AS q_id, {SQL_QUANT} AS qv, label AS ql
   FROM embeddings, s WHERE vec_id % s.stride = 0
 ),
 c AS (
-  SELECT vec_id AS c_id, {_SQL_QUANT} AS cv, label AS cl FROM embeddings
+  SELECT vec_id AS c_id, {SQL_QUANT} AS cv, label AS cl FROM embeddings
 ),
 scored AS (
   SELECT q_id,

@@ -30,10 +30,9 @@ from pyspark.sql import functions as F
 from ..caching import tracked_persist
 from ..catalog import table
 from ..operators import textops
-from ..operators.similarity import int_dot, quantize, quantized_cosine
+from ..operators.similarity import SQL_QUANT, int_dot, quantize, quantized_cosine
 from ..registry import register
 from .llm_text import _SQL_TOKS
-from .llm_vector import _SQL_QUANT as _SQL_QUANT_EMB
 
 # ---------------------------------------------------------------------------
 # shared integer helpers
@@ -66,10 +65,6 @@ def _sql_fdiv(a: str, b: str) -> str:
     return f"(({a}) - ((({a}) % ({b})) + ({b})) % ({b})) // ({b})"
 
 
-# quantized int vector at scale 1000 (the llm_vector.py house scale)
-_SQL_QUANT = (
-    "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-)
 # coarser scale-100 quantization for the power-iteration matvec chain,
 # sized so every round's n·(x·v)·x sums stay far inside int64 even at
 # 1e9 vectors (|x_q| <= ~100; see the bound audit below)
@@ -134,7 +129,7 @@ def _kmeans_oracle(k: int) -> str:
     d2 = _sql_l2_dist("v2.x", "cf.c")
     ci = _sql_fdiv("1000*s", "n")
     return f"""
-WITH v AS (SELECT vec_id, {_SQL_QUANT} AS x FROM embeddings),
+WITH v AS (SELECT vec_id, {SQL_QUANT} AS x FROM embeddings),
 seeds AS (SELECT CAST(vec_id AS INT) AS cl, x AS c FROM v WHERE vec_id < {k}),
 a1 AS (
   SELECT v.vec_id, MIN([{d1}, CAST(s.cl AS BIGINT)]) AS m
@@ -1328,7 +1323,7 @@ lex AS (
     FROM ldots d JOIN nrm x ON d.q_id = x.doc_id JOIN nrm y ON d.c_id = y.doc_id
   ) WHERE rnk <= {_RRF_LIST_K}
 ),
-v AS (SELECT vec_id, {_SQL_QUANT_EMB} AS qv FROM embeddings),
+v AS (SELECT vec_id, {SQL_QUANT} AS qv FROM embeddings),
 nv AS (
   SELECT vec_id, qv, SQRT(CAST(list_dot_product(qv, qv) AS DOUBLE)) AS nrm FROM v
 ),
@@ -2304,7 +2299,7 @@ def _semdedup_2level_oracle() -> str:
         " * SQRT(CAST(list_dot_product(b.x, b.x) AS DOUBLE)))"
     )
     return f"""
-WITH v AS (SELECT vec_id, {_SQL_QUANT} AS x FROM embeddings),
+WITH v AS (SELECT vec_id, {SQL_QUANT} AS x FROM embeddings),
 seeds AS (SELECT CAST(vec_id AS INT) AS c1, x AS c FROM v WHERE vec_id < {_SEM2_K1}),
 a1 AS (
   SELECT v.vec_id, MIN([{d1}, CAST(s.c1 AS BIGINT)]) AS m

@@ -1229,7 +1229,9 @@ def stream_ivf_ann_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import (
         _nearest_centroids_udf,
         build_ivf_centroids,
+        cosine_from_norms,
         int_dot,
+        int_norm,
         quantize,
     )
     from ..plans.llm_vector import _strided_queries
@@ -1255,9 +1257,7 @@ def stream_ivf_ann_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("q_id"), quantize(F.col("embedding")).alias("q_vec")
         )
-        .withColumn(
-            "q_nrm", F.sqrt(int_dot(F.col("q_vec"), F.col("q_vec")).cast("double"))
-        )
+        .withColumn("q_nrm", int_norm(F.col("q_vec")))
         .withColumn("cell", F.explode(probe(F.col("q_vec"))))
     )
 
@@ -1266,9 +1266,7 @@ def stream_ivf_ann_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("c_id"), quantize(F.col("embedding")).alias("c_vec")
         )
-        .withColumn(
-            "c_nrm", F.sqrt(int_dot(F.col("c_vec"), F.col("c_vec")).cast("double"))
-        )
+        .withColumn("c_nrm", int_norm(F.col("c_vec")))
         .withColumn("cell", assign_final(F.col("c_vec")).getItem(0))
     )
     cand = (
@@ -1277,9 +1275,8 @@ def stream_ivf_ann_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "c_id",
-            (
-                int_dot(F.col("q_vec"), F.col("c_vec")).cast("double")
-                / (F.col("q_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("q_vec"), F.col("c_vec")), F.col("q_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
     )
@@ -2217,7 +2214,7 @@ def stream_contrastive_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..caching import tracked_persist
-    from ..operators.similarity import int_dot, quantize
+    from ..operators.similarity import cosine_from_norms, int_dot, int_norm, quantize
     from ..plans.llm_vector import _CONTRASTIVE_K, _strided_queries
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2228,9 +2225,7 @@ def stream_contrastive_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             quantize(F.col("embedding")).alias("q_vec"),
             F.col("label").alias("q_lab"),
         )
-        .withColumn(
-            "q_nrm", F.sqrt(int_dot(F.col("q_vec"), F.col("q_vec")).cast("double"))
-        )
+        .withColumn("q_nrm", int_norm(F.col("q_vec")))
         .withColumn("__one", F.lit(1))
     )
     arriving = (
@@ -2240,9 +2235,7 @@ def stream_contrastive_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             quantize(F.col("embedding")).alias("c_vec"),
             F.col("label").alias("c_lab"),
         )
-        .withColumn(
-            "c_nrm", F.sqrt(int_dot(F.col("c_vec"), F.col("c_vec")).cast("double"))
-        )
+        .withColumn("c_nrm", int_norm(F.col("c_vec")))
         .withColumn("__one", F.lit(1))
     )
     cand = (
@@ -2254,9 +2247,8 @@ def stream_contrastive_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("neg"))
             .alias("side"),
             "c_id",
-            (
-                int_dot(F.col("q_vec"), F.col("c_vec")).cast("double")
-                / (F.col("q_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("q_vec"), F.col("c_vec")), F.col("q_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
     )
@@ -2332,7 +2324,13 @@ def stream_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..caching import tracked_persist
-    from ..operators.similarity import int_dot, lsh_bucket_keys_gemm, quantize
+    from ..operators.similarity import (
+        cosine_from_norms,
+        int_dot,
+        int_norm,
+        lsh_bucket_keys_gemm,
+        quantize,
+    )
     from ..plans.llm_vector import _ND_DIM, _ND_PLANES, _ND_TABLES, _ND_THRESH
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2346,9 +2344,7 @@ def stream_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "keys"
             ),
         )
-        .withColumn(
-            "e_nrm", F.sqrt(int_dot(F.col("e_vec"), F.col("e_vec")).cast("double"))
-        )
+        .withColumn("e_nrm", int_norm(F.col("e_vec")))
         .select("eval_id", "e_vec", "e_nrm", F.posexplode("keys").alias("tbl", "key"))
     )
     arriving = (
@@ -2361,9 +2357,7 @@ def stream_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "keys"
             ),
         )
-        .withColumn(
-            "c_nrm", F.sqrt(int_dot(F.col("c_vec"), F.col("c_vec")).cast("double"))
-        )
+        .withColumn("c_nrm", int_norm(F.col("c_vec")))
         .select("c_id", "c_vec", "c_nrm", F.posexplode("keys").alias("tbl", "key"))
     )
     cand = (
@@ -2371,9 +2365,8 @@ def stream_decontamination_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "eval_id",
             "c_id",
-            (
-                int_dot(F.col("e_vec"), F.col("c_vec")).cast("double")
-                / (F.col("e_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("e_vec"), F.col("c_vec")), F.col("e_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(_ND_THRESH))
@@ -2599,7 +2592,13 @@ def stream_cluster_contamination_state(spark: SparkSession, sf_dir: str) -> Data
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..caching import tracked_persist
-    from ..operators.similarity import int_dot, lsh_bucket_keys_gemm, quantize
+    from ..operators.similarity import (
+        cosine_from_norms,
+        int_dot,
+        int_norm,
+        lsh_bucket_keys_gemm,
+        quantize,
+    )
     from ..plans.llm_vector import (
         _ND_DIM,
         _ND_PLANES,
@@ -2619,9 +2618,7 @@ def stream_cluster_contamination_state(spark: SparkSession, sf_dir: str) -> Data
                 "keys"
             ),
         )
-        .withColumn(
-            "e_nrm", F.sqrt(int_dot(F.col("e_vec"), F.col("e_vec")).cast("double"))
-        )
+        .withColumn("e_nrm", int_norm(F.col("e_vec")))
         .select("eval_id", "e_vec", "e_nrm", F.posexplode("keys").alias("tbl", "key"))
     )
     # frozen membership at the EVAL grain (index-build artifact, like
@@ -2643,9 +2640,7 @@ def stream_cluster_contamination_state(spark: SparkSession, sf_dir: str) -> Data
                 "keys"
             ),
         )
-        .withColumn(
-            "c_nrm", F.sqrt(int_dot(F.col("c_vec"), F.col("c_vec")).cast("double"))
-        )
+        .withColumn("c_nrm", int_norm(F.col("c_vec")))
         .select("c_id", "c_vec", "c_nrm", F.posexplode("keys").alias("tbl", "key"))
     )
     linked = (
@@ -2653,9 +2648,8 @@ def stream_cluster_contamination_state(spark: SparkSession, sf_dir: str) -> Data
         .select(
             "eval_id",
             "c_id",
-            (
-                int_dot(F.col("e_vec"), F.col("c_vec")).cast("double")
-                / (F.col("e_nrm") * F.col("c_nrm"))
+            cosine_from_norms(
+                int_dot(F.col("e_vec"), F.col("c_vec")), F.col("e_nrm"), F.col("c_nrm")
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(_ND_THRESH))

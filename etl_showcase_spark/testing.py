@@ -119,7 +119,3 @@ def compare_frames(actual: pd.DataFrame, expected: pd.DataFrame) -> list[str]:
                     f"(first at row {idx}: spark={av.iloc[idx]!r} oracle={ev.iloc[idx]!r})"
                 )
     return problems
-
-
-def spark_to_pandas(df) -> pd.DataFrame:
-    return df.toPandas()

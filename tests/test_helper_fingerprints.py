@@ -85,6 +85,14 @@ HELPERS = [
     # labeller every clustering query ends in
     "etl_showcase_spark.operators.similarity:lsh_neardup_pairs",
     "etl_showcase_spark.operators.graph:connected_components",
+    # the quantized-cosine decision, once per spelling, and the one
+    # broadcast-panel skeleton: the vector top-k family (ann_*,
+    # contrastive_*, chunk_neighbor_topk, hybrid_rrf_retrieval, the
+    # embedding-LSH and tombstone-serve consumers) composes them
+    "etl_showcase_spark.operators.similarity:int_norm",
+    "etl_showcase_spark.operators.similarity:cosine_from_norms",
+    "etl_showcase_spark.operators.similarity:_vector_kernels",
+    "etl_showcase_spark.operators.similarity:_broadcast_panel_topk",
 ]
 
 
