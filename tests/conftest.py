@@ -37,3 +37,32 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(params=["one_task", "fastsv"])
+def cc_path(request, monkeypatch):
+    """Run the test under each connected_components execution path: a
+    one-task limit of -1 sends every edge list, an empty one too, to
+    the FastSV rounds."""
+    if request.param == "fastsv":
+        monkeypatch.setattr("etl_showcase_spark.operators.graph._ONE_TASK_MAX_EDGES", -1)
+    return request.param
+
+
+def union_find_components(edges):
+    """Pure-Python connected-components reference: {node: min node of
+    its component}; an edge with a None endpoint is skipped."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            # the smaller root wins, so every root is its set's min
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}

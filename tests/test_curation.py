@@ -3,6 +3,11 @@ asserts — the reference's test pattern, tests/test_spark_transform.py)."""
 
 from __future__ import annotations
 
+import os
+import random
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +17,8 @@ from etl_showcase_spark.operators.curation import (
     train_val_test_split,
 )
 from etl_showcase_spark.operators.graph import connected_components
+
+from .conftest import union_find_components
 
 
 def test_connected_components_two_clusters_and_chain(spark):
@@ -28,9 +35,66 @@ def test_connected_components_two_clusters_and_chain(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
 
 
-def test_connected_components_long_chain_converges():
-    # pointer doubling must close a 64-node chain well within max_iter
-    pass  # covered by the sf0.01 session_components oracle equivalence
+_PATH_IDS = random.Random(13).sample(range(1000, 1200), 200)
+
+CC_CASES = {
+    # the path's ids are not ordered along it
+    "two_components_and_path": [(2, 1), (2, 3), (10, 11), (12, 10), (31, 7), (7, 52), (52, 13), (13, 40)],
+    "self_loop": [(5, 5), (6, 5), (8, 8)],
+    "duplicates": [(1, 2), (1, 2), (2, 1), (3, 4), (4, 3), (4, 3), (2, 4)],
+    "empty": [],
+    "null_endpoint": [(1, 2), (None, 3), (4, None), (2, 6)],
+    # min-label propagation needs O(diameter) rounds here, far past the
+    # default max_iter; FastSV needs 8
+    "shuffled_path": list(zip(_PATH_IDS, _PATH_IDS[1:])),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CC_CASES))
+def test_connected_components_paths_match_union_find(spark, cc_path, case):
+    edges = spark.createDataFrame(CC_CASES[case], "src long, dst long")
+    out = connected_components(edges)
+    assert out.schema.simpleString() == "struct<id:bigint,component:bigint>"
+    got = {r["id"]: r["component"] for r in out.collect()}
+    assert got == union_find_components(CC_CASES[case])
+
+
+def test_connected_components_long_chain_converges(spark, monkeypatch):
+    # the shuffled path's FastSV labels are checked above; a round
+    # budget short of its 8 rounds raises rather than return split labels
+    monkeypatch.setattr("etl_showcase_spark.operators.graph._ONE_TASK_MAX_EDGES", -1)
+    edges = spark.createDataFrame(CC_CASES["shuffled_path"], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges, max_iter=2)
+
+
+def test_cc_solver_pickles_by_value(tmp_path):
+    # executor workers may not be able to import the package: the
+    # one-task solve must unpickle and run in an interpreter where it
+    # is absent
+    from pyspark import cloudpickle
+
+    from etl_showcase_spark.operators.graph import _make_cc_solver
+
+    script = (
+        "import importlib.util, pickle, sys\nimport pyarrow as pa\n"
+        "assert importlib.util.find_spec('etl_showcase_spark') is None, 'importable'\n"
+        "solve = pickle.loads(sys.stdin.buffer.read())\n"
+        "rb = pa.RecordBatch.from_pydict({'a': pa.array([9, 4, 7], pa.int64()), "
+        "'b': pa.array([4, 2, 8], pa.int64())})\n"
+        "out = pa.Table.from_batches(list(solve(iter([rb]))))\n"
+        "print(sorted(zip(out['id'].to_pylist(), out['component'].to_pylist())))\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        input=cloudpickle.dumps(_make_cc_solver()),
+        cwd=tmp_path,
+        env={k: v for k, v in os.environ.items() if k != "PYTHONPATH"},
+        capture_output=True,
+        timeout=120,
+    )
+    assert run.returncode == 0, run.stderr.decode()
+    assert run.stdout.decode().strip() == "[(2, 2), (4, 2), (7, 7), (8, 7), (9, 2)]"
 
 
 def test_split_is_stable_under_corpus_growth(spark):

@@ -85,6 +85,8 @@ HELPERS = [
     # labeller every clustering query ends in
     "etl_showcase_spark.operators.similarity:lsh_neardup_pairs",
     "etl_showcase_spark.operators.graph:connected_components",
+    "etl_showcase_spark.operators.graph:_make_cc_solver",
+    "etl_showcase_spark.operators.graph:_fastsv_round",
     # the quantized-cosine decision, once per spelling, and the one
     # broadcast-panel skeleton: the vector top-k family (ann_*,
     # contrastive_*, chunk_neighbor_topk, hybrid_rrf_retrieval, the

@@ -10,6 +10,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from .conftest import union_find_components
+
 KV = st.lists(
     st.tuples(st.integers(0, 20), st.integers(-1000, 1000)),
     min_size=0,
@@ -97,32 +99,12 @@ def test_minhash_band_keys_agree_across_runs(spark, seed):
     )
 )
 @settings(**_SETTINGS)
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, cc_path, edges):
     from etl_showcase_spark.operators.graph import connected_components
 
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     got = {r.id: r.component for r in connected_components(df).collect()}
-
-    # pure-Python union-find reference
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent[find(a)] = find(b)
-    nodes = {n for e in edges for n in e}
-    expected = {}
-    comp_min: dict[int, int] = {}
-    for n in nodes:
-        root = find(n)
-        comp_min[root] = min(comp_min.get(root, n), n)
-    for n in nodes:
-        expected[n] = comp_min[find(n)]
-    assert got == expected
+    assert got == union_find_components(edges)
 
 
 @given(
